@@ -20,7 +20,7 @@ from pyspark.sql import Column
 from pyspark.sql import DataFrame as SparkDataFrame
 from pyspark.sql import functions as F
 
-from .datatypes import spark_schema_to_arrow
+from .datatypes import result_arrow_schema, spark_schema_to_arrow
 from .errors import BallistaError, unknown_join_type
 from .expression import Expression, to_column
 
@@ -183,43 +183,41 @@ class DataFrame:
         """Incremental arrow batches — bounded driver memory at any scale
         (SURVEY §7 known-hard #4).
 
-        Arrow-native end to end: ``mapInArrow`` re-chunks each partition's
-        batches to ``batch_size`` rows and serializes them worker-side into
-        Arrow IPC blobs (one binary row per blob); the driver fetches those
-        rows one partition at a time via ``toLocalIterator`` and deserializes
-        blobs back into RecordBatches.  Driver-side Python work is O(blobs),
-        not O(rows) — no per-row ``asDict`` reconstruction — and peak driver
-        memory is one prefetched partition of compacted IPC bytes."""
+        The executors build the Arrow record batches in the JVM
+        (``Dataset.toArrowBatchRdd``: the ``ArrowConverters`` path behind
+        ``toArrow``, ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows
+        per batch).  ``PythonRDD.toLocalIteratorAndServe`` runs one job per
+        partition as the consumer asks for it, prefetching the next, and
+        serves each partition's IPC messages over a local socket
+        (``pyspark.util._local_iterator_from_socket``).  Each message is
+        decoded against :func:`~.datatypes.result_arrow_schema` and sliced
+        to at most ``batch_size`` rows without copying.  No Python worker
+        runs and no per-row Python object is built; peak driver memory is
+        one prefetched partition of Arrow bytes.
+
+        ``toArrowBatchRdd`` and ``_local_iterator_from_socket`` are not
+        public pyspark API (checked against pyspark 4.1.2)."""
+        from pyspark.serializers import NoOpSerializer
+        from pyspark.util import _local_iterator_from_socket
+
         size = int(batch_size)
-        # one blob is a single pa.binary() value (int32 offsets, 2 GiB hard
-        # cap); very wide rows x a big batch_size could overflow worker-side,
-        # so chunks above this byte size are subdivided before serializing
-        max_blob_bytes = 128 << 20
-
-        def serialize(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            def emit(chunk: pa.RecordBatch) -> Iterator[pa.RecordBatch]:
-                if chunk.nbytes > max_blob_bytes and chunk.num_rows > 1:
-                    half = chunk.num_rows // 2
-                    yield from emit(chunk.slice(0, half))
-                    yield from emit(chunk.slice(half))
-                    return
-                sink = pa.BufferOutputStream()
-                with pa.ipc.new_stream(sink, chunk.schema) as writer:
-                    writer.write_batch(chunk)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([sink.getvalue().to_pybytes()], type=pa.binary())],
-                    names=["ipc"],
-                )
-
-            for batch in batches:
-                for start in range(0, batch.num_rows, size):
-                    yield from emit(batch.slice(start, size))
-
-        blobs = self.df.mapInArrow(serialize, schema="ipc binary")
-        for row in blobs.toLocalIterator(prefetchPartitions=True):
-            with pa.ipc.open_stream(row[0]) as reader:
-                for batch in reader:
-                    yield batch
+        if size <= 0:
+            raise BallistaError(f"batch_size must be positive, got {batch_size}")
+        schema = result_arrow_schema(self.df)
+        sc = self.df.sparkSession.sparkContext
+        # name the stream's jobs after the JVM entry point that runs them;
+        # the serving thread inherits the call site when it is created
+        previous = sc.getLocalProperty("callSite.short")
+        sc._jsc.setCallSite("toLocalIteratorAndServe at collect_stream")
+        try:
+            rdd = self.df._jdf.toArrowBatchRdd()
+            sock_info = sc._jvm.PythonRDD.toLocalIteratorAndServe(rdd, True)
+        finally:
+            sc._jsc.setCallSite(previous)
+        for message in _local_iterator_from_socket(sock_info, NoOpSerializer()):
+            batch = pa.ipc.read_record_batch(pa.py_buffer(message), schema)
+            for start in range(0, batch.num_rows, size):
+                yield batch.slice(start, size)
 
     def show(self, num: int = 20) -> None:
         """Pretty-print first ``num`` rows (src/dataframe.rs:124-130)."""

@@ -106,6 +106,22 @@ def spark_schema_to_arrow(schema: T.StructType) -> pa.Schema:
     )
 
 
+def result_arrow_schema(df) -> pa.Schema:
+    """Arrow schema of a pyspark DataFrame's result, derived exactly as
+    pyspark's ``toArrow`` derives it.  The JVM's Arrow writer honours
+    ``spark.sql.execution.arrow.useLargeVarTypes`` (int64 offsets for
+    string/binary), so a schema that ignores it mis-decodes the batches —
+    and pyarrow aborts the process on the mismatched offsets instead of
+    raising."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(
+        df.schema,
+        error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=df.sparkSession._jconf.arrowUseLargeVarTypes(),
+    )
+
+
 def arrow_schema_to_spark(schema: pa.Schema) -> T.StructType:
     return T.StructType(
         [T.StructField(f.name, arrow_to_spark(f.type), f.nullable) for f in schema]

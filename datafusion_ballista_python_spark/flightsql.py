@@ -41,9 +41,13 @@ the planning server, because re-executing on DoGet would apply the side
 effects twice.
 
 Execution is the full Catalyst/AQE engine; the gateway only moves Arrow
-batches, and DoGet STREAMS them (``collect_stream``: one partition of
-worker-serialized IPC blobs on the driver at a time), so result size
-never exceeds driver memory.
+batches, and DoGet STREAMS them (``collect_stream``: the JVM builds the
+Arrow batches, ``Dataset.toArrowBatchRdd``, and serves them one partition
+at a time through ``pyspark.util._local_iterator_from_socket`` — both
+non-public pyspark 4.1.2 entry points, to re-check on a pyspark upgrade),
+so result size never exceeds driver memory.  Every SELECT schema the
+endpoint declares or decodes with is ``result_arrow_schema``, the one
+``toArrow`` uses.
 """
 
 from __future__ import annotations
@@ -63,6 +67,7 @@ except ImportError:  # pragma: no cover
 
 from pyspark.sql import SparkSession
 
+from .datatypes import result_arrow_schema
 from .errors import BallistaError
 
 # ---------------------------------------------------------------------------
@@ -398,10 +403,25 @@ def _serialized_schema(schema: pa.Schema) -> bytes:
     return sink.getvalue().to_pybytes()
 
 
-def _to_arrow_schema(df) -> pa.Schema:
-    from pyspark.sql.pandas.types import to_arrow_schema
+# gRPC clients refuse response metadata above 8 KiB by default, and a
+# Spark task failure's message carries whole JVM stack traces
+_MAX_ERROR_CHARS = 2048
 
-    return to_arrow_schema(df.schema)
+
+def _report_failures(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """Re-raise a failure of the running query as a ``FlightServerError``
+    carrying its root cause, short enough for gRPC status metadata."""
+    try:
+        yield from batches
+    except Exception as exc:
+        cause = getattr(exc, "java_exception", None)  # py4j.protocol.Py4JJavaError
+        if cause is None:
+            message = f"{type(exc).__name__}: {exc}"
+        else:
+            while cause.getCause() is not None:
+                cause = cause.getCause()
+            message = f"{cause.getClass().getName()}: {cause.getMessage()}"
+        raise flight.FlightServerError(message[:_MAX_ERROR_CHARS]) from exc
 
 
 def _is_command(df) -> bool:
@@ -518,7 +538,7 @@ class FlightSqlServer(flight.FlightServerBase if flight else object):
                     while len(self._planned_by_text) > 128:
                         self._planned_by_text.popitem(last=False)
             return table.schema, handle
-        return _to_arrow_schema(df), query.encode()
+        return result_arrow_schema(df), query.encode()
 
     def _statement_info(
         self, descriptor, schema: pa.Schema, ticket_type: str, handle: bytes
@@ -536,7 +556,7 @@ class FlightSqlServer(flight.FlightServerBase if flight else object):
                     "the planning server; re-submit the statement)"
                 )
             return table.schema
-        return _to_arrow_schema(self.spark.sql(handle.decode()))
+        return result_arrow_schema(self.spark.sql(handle.decode()))
 
     def _metadata_info(self, descriptor, schema: pa.Schema) -> "flight.FlightInfo":
         # metadata tickets round-trip the command itself
@@ -617,10 +637,8 @@ class FlightSqlServer(flight.FlightServerBase if flight else object):
             "table_type": pa.array([r[3] for r in rows], pa.utf8()),
         }
         if include_schema:
-            from pyspark.sql.pandas.types import to_arrow_schema
-
             blobs = [
-                _serialized_schema(to_arrow_schema(self.spark.table(r[2]).schema))
+                _serialized_schema(result_arrow_schema(self.spark.table(r[2])))
                 for r in rows
             ]
             data["table_schema"] = pa.array(blobs, pa.binary())
@@ -698,14 +716,16 @@ class FlightSqlServer(flight.FlightServerBase if flight else object):
                     )
                 return flight.RecordBatchStream(table)
             # SELECT path: executed on the full distributed engine, Arrow
-            # end to end, and STREAMED — collect_stream fetches one
-            # partition of IPC blobs at a time, so driver memory stays
-            # bounded no matter how large the result is
+            # end to end, and STREAMED — collect_stream serves the
+            # JVM-built Arrow batches of one partition at a time, so
+            # driver memory stays bounded no matter how large the result
+            # is.  collect_stream decodes with this same declared schema,
+            # even where the optimized plan narrowed a column to non-null.
             from .dataframe import DataFrame as _BDF
 
             df = self.spark.sql(handle.decode())
             return flight.GeneratorStream(
-                _to_arrow_schema(df), _BDF(df).collect_stream()
+                result_arrow_schema(df), _report_failures(_BDF(df).collect_stream())
             )
         if type_name == _SQL_NS + "CommandGetCatalogs":
             return flight.RecordBatchStream(self._catalogs_table())

@@ -95,32 +95,95 @@ def test_collect_stream_matches_collect_values(li):
     )
 
 
-def test_collect_stream_is_arrow_native(ctx):
-    """The driver must deserialize IPC blobs, not rebuild rows: for n rows
-    with batch_size B over p partitions there are at most p + ceil(n/B)
-    blob opens — per-row asDict would be 100k of them."""
-    import pyarrow.ipc
+def _run_in_job_group(sc, fn):
+    """``fn()`` with its Spark jobs tagged; returns (result, job ids)."""
+    import uuid
+
+    group = f"collect-stream-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "collect_stream test")
+    try:
+        result = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return result, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _stage_operator_graphs(sc, job_ids):
+    """DOT text of every stage of ``job_ids``: one cluster per physical
+    operator that produced the stage's RDDs (``MapInArrow``,
+    ``WholeStageCodegen (1)``, ...)."""
+    store = sc._jsc.sc().statusStore()
+    graph = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph
+    return [
+        graph.makeDotFile(store.operationGraphForStage(stage))
+        for job in job_ids
+        for stage in sc.statusTracker().getJobInfo(job).stageIds
+    ]
+
+
+def test_collect_stream_is_arrow_native(ctx, monkeypatch):
+    """The driver decodes the JVM's Arrow batches, not rows or worker-made
+    blobs: for n rows over p partitions with r rows per JVM batch there
+    are at most p + ceil(n/r) decodes — per-row objects would be 100k —
+    and no stage of the stream's jobs runs a Python-worker operator
+    (the former ``mapInArrow`` serializer showed up as ``MapInArrow``)."""
+    import math
+    import re
 
     from datafusion_ballista_python_spark.dataframe import DataFrame
 
-    sdf = ctx.spark.range(100_000, numPartitions=4).selectExpr(
+    n, parts = 100_000, 4
+    per_batch = int(ctx.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    sdf = ctx.spark.range(n, numPartitions=parts).selectExpr(
         "id", "CAST(id AS DOUBLE) AS v"
     )
-    opens = 0
-    orig_open = pa.ipc.open_stream
+    decodes = 0
+    orig_decode = pa.ipc.read_record_batch
 
-    def counting_open(*a, **kw):
-        nonlocal opens
-        opens += 1
-        return orig_open(*a, **kw)
+    def counting_decode(*a, **kw):
+        nonlocal decodes
+        decodes += 1
+        return orig_decode(*a, **kw)
 
-    pa.ipc.open_stream = counting_open
-    try:
-        total = sum(b.num_rows for b in DataFrame(sdf).collect_stream(batch_size=10_000))
-    finally:
-        pa.ipc.open_stream = orig_open
-    assert total == 100_000
-    assert 0 < opens <= 4 + 10  # blobs, nowhere near per-row
+    monkeypatch.setattr(pa.ipc, "read_record_batch", counting_decode)
+    sc = ctx.spark.sparkContext
+    batches, jobs = _run_in_job_group(
+        sc, lambda: list(DataFrame(sdf).collect_stream(batch_size=10_000))
+    )
+    assert sum(b.num_rows for b in batches) == n
+    assert 0 < decodes <= parts + math.ceil(n / per_batch)
+    graphs = _stage_operator_graphs(sc, jobs)
+    assert graphs and all("WholeStageCodegen" in g for g in graphs)
+    python_op = re.compile(r'label="[^"]*(Python|MapIn|InPandas|InArrow)')
+    assert not [g for g in graphs if python_op.search(g)]
+
+
+def test_collect_stream_empty_result_has_no_batches(ctx, li):
+    from datafusion_ballista_python_spark.dataframe import DataFrame
+
+    assert list(li.filter(lit(False)).collect_stream()) == []
+    assert list(DataFrame(ctx.spark.range(0)).collect_stream()) == []
+
+
+def test_collect_stream_first_batch_is_lazy(ctx):
+    """The first batch of an 8-partition result costs the jobs of its own
+    partition and the prefetched next one, not all eight; a consumer
+    that stops there leaves the session usable."""
+    from datafusion_ballista_python_spark.dataframe import DataFrame
+
+    sc = ctx.spark.sparkContext
+    stream = DataFrame(ctx.spark.range(0, 80_000, 1, 8)).collect_stream()
+    first, jobs = _run_in_job_group(sc, lambda: next(stream))
+    assert first.num_rows > 0
+    assert 0 < len(jobs) < 8
+    stream.close()
+    after = DataFrame(ctx.spark.range(0, 1000, 1, 4)).collect_stream()
+    assert sum(b.num_rows for b in after) == 1000
+
+
+def test_collect_stream_rejects_nonpositive_batch_size(li):
+    with pytest.raises(BallistaError, match="batch_size must be positive"):
+        next(li.collect_stream(batch_size=0))
 
 
 def test_explain_string_has_plan(li):

@@ -176,6 +176,102 @@ def test_large_result_streams(client):
     assert t.column("id").to_pylist()[:3] == [0, 1, 2]
 
 
+def test_non_null_filter_matches_to_arrow(client, ctx):
+    """A filter makes the optimized plan's column non-null while the
+    analyzed schema stays nullable; the stream must still carry exactly
+    the declared schema, the one toArrow returns."""
+    q = "SELECT * FROM fs_nation WHERE n_regionkey < 2"
+    info = client.get_flight_info(flightsql.statement_query_descriptor(q))
+    over_wire = flightsql.execute_query(client, q)
+    direct = ctx.spark.sql(q).toArrow()
+    assert over_wire.num_rows > 0
+    assert over_wire.schema == direct.schema == info.schema
+    assert over_wire.sort_by("n_nationkey").equals(direct.sort_by("n_nationkey"))
+
+
+_TYPED_QUERY = """
+SELECT id,
+       IF(id % 4 = 0, NULL, CAST(id AS STRING)) AS s,
+       CAST(CAST(id AS STRING) AS BINARY) AS b,
+       CAST(id AS DECIMAL(12, 2)) AS d,
+       TIMESTAMP'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts,
+       TIMESTAMP_NTZ'2024-01-01 00:00:00' AS ts_ntz,
+       array(id, id + 1) AS a,
+       named_struct('x', id, 'y', CAST(id AS STRING)) AS st,
+       map(CAST(id AS STRING), id) AS m
+FROM range(0, 25, 1, 3)
+"""
+
+
+@pytest.mark.parametrize("large_var_types", ["false", "true"])
+def test_result_types_match_to_arrow(client, ctx, large_var_types):
+    """collect_stream and DoGet decode every type as toArrow does, with
+    and without int64-offset (large) string/binary types — a decode schema
+    that ignored the setting aborted the process."""
+    from datafusion_ballista_python_spark.dataframe import DataFrame
+
+    spark = ctx.spark
+    spark.conf.set("spark.sql.execution.arrow.useLargeVarTypes", large_var_types)
+    try:
+        expected = spark.sql(_TYPED_QUERY).toArrow()
+        streamed = pa.Table.from_batches(
+            list(DataFrame(spark.sql(_TYPED_QUERY)).collect_stream())
+        )
+        over_wire = flightsql.execute_query(client, _TYPED_QUERY)
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.useLargeVarTypes")
+    string_type = pa.large_string() if large_var_types == "true" else pa.string()
+    assert expected.schema.field("s").type == string_type
+    assert streamed.equals(expected)
+    assert over_wire.equals(expected)
+
+
+def test_empty_result_has_declared_schema(client):
+    q = "SELECT n_nationkey, n_name FROM fs_nation WHERE false"
+    info = client.get_flight_info(flightsql.statement_query_descriptor(q))
+    table = client.do_get(info.endpoints[0].ticket).read_all()
+    assert table.num_rows == 0
+    assert table.schema == info.schema
+
+
+def test_consumer_stopping_early_leaves_session_usable(client):
+    info = client.get_flight_info(
+        flightsql.statement_query_descriptor("SELECT id FROM range(0, 400000, 1, 8)")
+    )
+    reader = client.do_get(info.endpoints[0].ticket)
+    assert reader.read_chunk().data.num_rows > 0
+    reader.cancel()
+    table = flightsql.execute_query(client, "SELECT count(*) AS n FROM fs_nation")
+    assert table.column("n").to_pylist() == [25]
+
+
+def test_failing_query_raises_flight_error(client, ctx):
+    """A task failure reaches the client as a FlightError carrying the
+    root cause — not a hang, and not a status too large for gRPC."""
+    import threading
+
+    spark = ctx.spark
+    previous = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    outcome = {}
+
+    def run():
+        try:
+            flightsql.execute_query(client, "SELECT 1 / (id - id) AS x FROM range(10)")
+        except Exception as exc:  # noqa: BLE001 - inspected below
+            outcome["error"] = exc
+
+    try:
+        worker = threading.Thread(target=run, daemon=True)
+        worker.start()
+        worker.join(timeout=120)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", previous)
+    assert not worker.is_alive(), "DoGet of a failing query hung"
+    assert isinstance(outcome.get("error"), flight.FlightError), outcome
+    assert "DIVIDE_BY_ZERO" in str(outcome["error"])
+
+
 def test_get_tables_schema_filter(client):
     info = client.get_flight_info(
         flightsql.metadata_descriptor(

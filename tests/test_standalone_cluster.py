@@ -45,13 +45,18 @@ def _run(args, timeout):
 
 
 @pytest.mark.slow
-def test_standalone_master_worker_end_to_end():
+def test_standalone_master_worker_end_to_end(tmp_path):
+    # the report goes to tmp_path: the suite must not rewrite the
+    # committed tools/standalone_cluster_smoke.json
+    report = tmp_path / "standalone_cluster_smoke.json"
     proc = _run(
-        [sys.executable, "tools/standalone_cluster_smoke.py"], timeout=600
+        [sys.executable, "tools/standalone_cluster_smoke.py", "--out", str(report)],
+        timeout=600,
     )
     lines = [ln for ln in proc.stdout.splitlines() if ln.strip()]
     assert lines, f"no smoke output; stderr tail: {proc.stderr[-800:]}"
     out = json.loads(lines[-1])
+    assert json.loads(report.read_text()) == out
     assert out["ok"], f"standalone smoke failed: {out}"
     assert out["master_url"].startswith("spark://")
     # driver + at least one REAL executor registered a block manager

@@ -13,13 +13,14 @@ What this flushes beyond the local-cluster[2,4,4096] smoke:
   children) including the addPyFile package shipping to them;
 - session attach/teardown over a real RPC port.
 
-Usage: python tools/standalone_cluster_smoke.py [sf_dir]
-Prints one JSON line; exit 0 iff every step passed.  Writes
-tools/standalone_cluster_smoke.json next to this file.
+Usage: python tools/standalone_cluster_smoke.py [sf_dir] [--out PATH]
+Prints one JSON line; exit 0 iff every step passed.  Writes the same JSON
+to PATH (default: tools/standalone_cluster_smoke.json next to this file).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -32,7 +33,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SMOKE = ["q1_pricing_summary", "q5_region_revenue", "dedup_semantic"]
 
 
+_DEFAULT_OUT = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "standalone_cluster_smoke.json"
+)
+
+
 def main() -> int:
+    parser = argparse.ArgumentParser(usage="%(prog)s [sf_dir] [--out PATH]")
+    parser.add_argument("--out", default=_DEFAULT_OUT, help="JSON report path")
+    args, sys.argv[1:] = parser.parse_known_args()
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
     from datafusion_ballista_python_spark.cluster import Executor, Scheduler
@@ -110,11 +119,7 @@ def main() -> int:
             executor.stop()
         scheduler.stop()
 
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "standalone_cluster_smoke.json",
-    )
-    with open(path, "w") as fh:
+    with open(args.out, "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
         fh.write("\n")
     print(json.dumps(out))
