@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Benchmark: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
+``session.local_session`` (local[$SPARK_GRAFT_CPUS], default the CPUs this
+process may run on).  Prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
 Config parity with the reference defaults (BASELINE.md): shuffle_partitions=16
@@ -188,8 +189,10 @@ def render_headline(headline: dict, limit: int = LIMIT) -> str:
 # immune to BLAS thread-pool contention, >=2 s wall on the recording
 # host class, run BEFORE and AFTER the query sweep so a judge can
 # attribute any per-query delta to host speed vs plan change
-# mechanically.  Module-scope so tools/solo_floor.py IMPORTS it —
-# cross-artifact calib comparability is structural, not a promise.
+# mechanically.  Module-scope so other measurements IMPORT it
+# (perfbench/run.py; the r12 solo floors, OPTIMIZATION_r12.md "Closing
+# gates") — cross-artifact calib comparability is structural, not a
+# promise.
 CALIB_V = 2
 CALIB_WORK_MIB = 4096
 # v2 probe seconds on the r11 recording host (min of repeated unloaded
@@ -309,7 +312,10 @@ def main() -> None:
         compare(sys.argv[2:])
         return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from datafusion_ballista_python_spark.corpus import load_all
+    from datafusion_ballista_python_spark.session import local_cpus, local_session
+
+    cpus = local_cpus()
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
     # Scaling-probe mode (r11 verdict item #2): the default 16 shuffle
@@ -338,34 +344,7 @@ def main() -> None:
     except ValueError:
         shuffle_parts = 16
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("bench")
-        .config("spark.sql.shuffle.partitions", str(shuffle_parts))
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
-        .config("spark.ui.enabled", "false")
-        # keep stdout clean: the driver records the LAST line of stdout as
-        # the bench artifact; progress-bar control chars must not precede it
-        .config("spark.ui.showConsoleProgress", "false")
-        # 8g, deliberately not larger: oversized heaps on virtualized hosts
-        # stall tens of seconds on first-touch page backing (measured: 32g
-        # heap -> intermittent 20-60s JVM freezes; 8g -> stable)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS",
-                           "-XX:ReservedCodeCacheSize=512m"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    from datafusion_ballista_python_spark.corpus import load_all
-    from datafusion_ballista_python_spark.session import ensure_session_confs
-
-    ensure_session_confs(spark)
+    spark = local_session("bench", cpus=cpus, shuffle_partitions=shuffle_parts)
     registry = load_all()
 
     # JIT warmup: run every headline query once at the smallest SF so
@@ -454,7 +433,7 @@ def main() -> None:
                 "norm": norm,
                 "repeats": repeats,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                "cpus": int(cpus) if str(cpus).isdigit() else cpus,
+                "cpus": cpus,
                 **({"scaling": 1, "shuffle_partitions": shuffle_parts}
                    if scaling else {}),
             },
@@ -481,7 +460,7 @@ def main() -> None:
         "calib_v": CALIB_V,
         "repeats": repeats,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "cpus": int(cpus) if str(cpus).isdigit() else cpus,
+        "cpus": cpus,
         # only present under SPARK_GRAFT_SCALING=1 — the headline line is
         # byte-compatible with previous rounds when the flag is unset
         **({"scaling": 1, "shuffle_partitions": shuffle_parts}

@@ -854,7 +854,7 @@ def q21_suppliers_waiting(spark, sf_dir):
         )
     )
     # Order-grain aggregate instead of the per-order window pair (r11,
-    # tools/ab_q21.py: identical 37-row output, 0.76 -> 0.70 s noop at
+    # OPTIMIZATION_r11.md §15: identical 37-row output, 0.76 -> 0.70 s noop at
     # sf0.1): the window computed n_supp / n_late_supp per (order, supp)
     # row and then FILTERED to the single late supplier — but when exactly
     # one supplier in the order is late, max(when(late, sk)) IS that

@@ -27,16 +27,14 @@ from pyspark.sql import functions as F
 
 from .text import normalized_text
 
-# Eagerness of the ordered-shingle checkpoint in jaccard_join /
-# containment_join.  Module-level so tools/ab_eager_ckpt.py can interleave
-# both settings in one session.  LAZY by the r12 measurement (eager ->
-# lazy: jaccard 1.73 -> 1.64 s, containment 1.86 -> 1.73 s, identical
-# rows): the r11 duplicate-compute concern does not materialize — under
-# AQE, creating even a lazy checkpoint's RDD finalizes the plan and runs
-# every intermediate stage once at build time, so the eager mode's only
+# The ordered-shingle checkpoint in jaccard_join / containment_join is
+# LAZY by the r12 measurement (OPTIMIZATION_r12.md §7, eager -> lazy:
+# jaccard 1.73 -> 1.64 s, containment 1.86 -> 1.73 s, identical rows): the
+# r11 duplicate-compute concern does not materialize — under AQE, creating
+# even a lazy checkpoint's RDD finalizes the plan and runs every
+# intermediate stage once at build time, so the eager mode's only
 # difference is a dedicated final-stage job whose blocks the first real
 # action re-reads.
-_EAGER_SH_CKPT = False
 
 
 def exact_clusters(
@@ -445,7 +443,7 @@ def _ordered_grams(base: DataFrame, id_col: str, order: str) -> DataFrame:
     The document-frequency attach has two result-identical formulations,
     selected by ``SPARK_GRAFT_DF_ATTACH`` (window count == group count, so
     ordering, candidates and results are bit-identical — verified by
-    tools/ab_ordered_grams.py and the oracle replay):
+    the four-variant A/B in OPTIMIZATION_r12.md §1 and the oracle replay):
 
     - ``"window"`` (default): ``COUNT() OVER (PARTITION BY __tok)`` — one
       full occurrence exchange, no second pass; measured fastest at bench
@@ -717,15 +715,15 @@ def jaccard_join(
     base = with_shingles(df, text_col, shingle_n, "grams").select(
         F.col(id_col), F.col("grams")
     )
-    # consumed by both prefix sides; localCheckpoint (lazy, see
-    # _EAGER_SH_CKPT), not persist:
+    # consumed by both prefix sides; localCheckpoint (lazy, see the
+    # module note), not persist:
     # it materializes the scan -> tokenize -> shingle (-> frequency
     # re-sort) DAG exactly once and the ContextCleaner reclaims it when
     # the result frame is GC'd — a plain persist() registers in the
     # CacheManager forever, so repeated calls in a long-lived session
     # accumulate cached frames with no release path (same reasoning as
     # triangle_count's checkpoints)
-    sh = _ordered_grams(base, id_col, order).localCheckpoint(eager=_EAGER_SH_CKPT)
+    sh = _ordered_grams(base, id_col, order).localCheckpoint(eager=False)
     plen = (
         F.size("grams")
         - F.ceil(F.lit(threshold) * F.size("grams")).cast("int")
@@ -827,11 +825,11 @@ def containment_join(
         F.col(id_col), F.col("grams")
     )
     # consumed by the prefix side, the full side, and the verify stage;
-    # localCheckpoint (lazy, see _EAGER_SH_CKPT), not persist — see
+    # localCheckpoint (lazy, see the module note), not persist — see
     # jaccard_join: the
     # ContextCleaner reclaims the checkpoint on GC, where a persist()
     # would leak CacheManager entries across repeated batch calls
-    sh = _ordered_grams(base, id_col, order).localCheckpoint(eager=_EAGER_SH_CKPT)
+    sh = _ordered_grams(base, id_col, order).localCheckpoint(eager=False)
     plen = (
         F.size("grams")
         - F.ceil(F.lit(threshold) * F.size("grams")).cast("int")

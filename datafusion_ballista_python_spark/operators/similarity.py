@@ -1016,7 +1016,7 @@ def embed_covariance(
     # the vector, filtered j >= i.  The original nested
     # transform/flatten/explode built dim*(dim+1)/2 structs per row through
     # INTERPRETED higher-order functions (HOFs are CodegenFallback) — the
-    # r11 A/B (tools/ab_covariance.py) measured it at 1.71 s vs 0.40 s for
+    # r11 A/B (OPTIMIZATION_r11.md §13) measured it at 1.71 s vs 0.40 s for
     # this Generate-based form at sf0.1, with bit-identical (i, j, sxy, n)
     # aggregates.  The one remaining HOF is the per-ROW pad/truncate
     # transform (dim evals per row, not dim^2): element_at keeps the exact

@@ -10,15 +10,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# Eagerness of the span pipelines' token-frame checkpoint; module-level
-# so tools/ab_eager_ckpt.py can interleave both settings in one session.
-# LAZY by the r12 measurement (spans 0.90 -> 0.87 s, exact_substrings
-# 0.48 -> 0.39 s, identical rows): the narrow-from-scan multi-consumer
-# race the r11 round guarded against does not occur — AQE plan
-# finalization runs the tokenize stage once at checkpoint-RDD creation,
-# and the consumers read its output.
-_EAGER_TOK_CKPT = False
-
 
 def _trimmed(col: str | Column) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -426,7 +417,7 @@ def unigram_perplexity(
     # terms frame (identical integers: corpus term count == sum of
     # per-doc tfs).  The r11 round derived counts from tf instead
     # (counts = tf.groupBy(term).sum(tf)) to save this branch's
-    # tokenize+explode; the r12 tripwire A/B (tools/ab_ppl_buckets.py)
+    # tokenize+explode; the r12 tripwire A/B (OPTIMIZATION_r12.md §6)
     # measured that form a real 1.26x regression on the composing
     # perplexity_buckets entry and neutral on the solo entry: deriving
     # from tf SERIALIZES the counts branch behind tf's (id, term)
@@ -598,14 +589,18 @@ def _tokens_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     triangle_count's oriented-edge frame: the span pipelines consume the
     tokenization 2-3 times (anchor explode, span-text slice join,
     position explode), and a lazily returned persist would re-tokenize
-    the whole corpus per consumer until the cache materializes.  Lazy
-    per the _EAGER_TOK_CKPT measurement note.
+    the whole corpus per consumer until the cache materializes.  LAZY by
+    the r12 measurement (OPTIMIZATION_r12.md §7: spans 0.90 -> 0.87 s,
+    exact_substrings 0.48 -> 0.39 s, identical rows): the narrow-from-scan
+    multi-consumer race the r11 round guarded against does not occur —
+    AQE plan finalization runs the tokenize stage once at checkpoint-RDD
+    creation, and the consumers read its output.
     """
     from .training import _token_array
 
     return df.select(
         F.col(id_col), _token_array(text_col).alias("__t")
-    ).localCheckpoint(eager=_EAGER_TOK_CKPT)
+    ).localCheckpoint(eager=False)
 
 
 def _maximal_spans_from_toks(
@@ -614,7 +609,7 @@ def _maximal_spans_from_toks(
     """maximal_repeated_spans body over a pre-materialized (id, __t)
     token frame — shared with remove_repeated_spans so the corpus-wide
     tokenization is paid once across both span derivation and removal."""
-    # Anchor assembly + hot filter, r11 form (tools/ab_spans.py: 1.43 s ->
+    # Anchor assembly + hot filter, r11 form (OPTIMIZATION_r11.md §14: 1.43 s ->
     # 0.60 s at sf0.1, identical rows).  Two changes vs the original
     # explode(_ngrams(...)) + aggregate + join:
     # (1) codegen assembly — posexplode the token array once and build each
@@ -940,8 +935,8 @@ def bigram_perplexity(
     full btf-grain exchanges on (p, w) for the cb join AND on (p) for
     the cp join — including the same Zipf-head hash(p) exchange the
     window needs, since hash(p, w) partitioning cannot satisfy a join on
-    p — plus the model-table aggregation shuffles (r12 A/B:
-    tools/ab_bigram.py, locally flat 1.96 vs 1.90 s, identical rows,
+    p — plus the model-table aggregation shuffles (r12 A/B,
+    OPTIMIZATION_r12.md §3: locally flat 1.96 vs 1.90 s, identical rows,
     Exchange refs 32 -> 20, model-table joins gone from the plan).
     Known trade: a window partition cannot be AQE-skew-split, but
     neither could the joins it replaces — an aggregate sits between each

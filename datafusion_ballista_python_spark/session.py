@@ -13,6 +13,8 @@ the scale-oriented defaults we want on every session:
 
 ``ensure_session_confs(spark)`` is idempotent and safe to call on a session we
 did not create (the correctness driver passes us its own session).
+``local_session`` is the one way the bench, the tests and ``tools/`` build a
+local session; the cluster smokes call ``build_session`` with their master.
 """
 
 from __future__ import annotations
@@ -79,28 +81,36 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
 
 
 def _ship_package(spark: SparkSession) -> None:
-    """Ship this package to executors when they are SEPARATE processes.
+    """Make this package importable in the session's Python workers.
 
-    In ``local[*]`` the Python workers fork from the driver and inherit its
-    ``sys.path``; on any real deployment (``local-cluster``, standalone,
-    YARN, k8s) executors spawn their own workers, and a cloudpickled
+    Workers never see the driver's ``sys.path`` edits: a cloudpickled
     pandas_udf / mapInPandas closure that references this package by module
-    name dies with ModuleNotFoundError at deserialization — found by the
-    round-8 ``tools/local_cluster_smoke.py`` run (dedup_semantic's centroid
-    matmul was the first casualty).  The fix is the idiomatic Spark one:
-    ``sc.addPyFile`` a zip of the package, which every executor appends to
-    its worker ``sys.path``.  Zipped lazily, once per JVM (re-adding the
+    name dies with ModuleNotFoundError at deserialization unless the worker
+    finds the package on its own path.  In ``local[*]`` the
+    ``pyspark.daemon`` workers import from ``PYTHONPATH`` and the driver's
+    cwd, so the repo root goes in front of the ``PYTHONPATH`` the session
+    passes to its workers (``PythonWorkerFactory`` merges it) — a driver
+    started outside the repo root would otherwise fail every Python-worker
+    entry.  On any real deployment (``local-cluster``, standalone, YARN,
+    k8s) executors spawn their own workers on other hosts, so the package
+    ships as a zip through ``sc.addPyFile``, which every executor appends
+    to its worker ``sys.path`` — found by the round-8
+    ``tools/local_cluster_smoke.py`` run (dedup_semantic's centroid matmul
+    was the first casualty).  Zipped lazily, once per JVM (re-adding the
     same path is a Spark no-op but re-zipping 20k LoC per session is not).
     """
     sc = spark.sparkContext
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     if sc.master.startswith("local[") or sc.master == "local":
-        return  # forked workers share the driver's sys.path
-    import os
+        paths = sc.environment.get("PYTHONPATH", "")
+        if repo_root not in paths.split(os.pathsep):
+            sc.environment["PYTHONPATH"] = os.pathsep.join(
+                p for p in (repo_root, paths) if p
+            )
+        return
     import tempfile
     import zipfile
 
-    pkg_root = os.path.dirname(os.path.abspath(__file__))
-    repo_root = os.path.dirname(pkg_root)
     zip_path = os.path.join(
         tempfile.gettempdir(), f"dbps_pkg_{os.getpid()}.zip"
     )
@@ -156,3 +166,45 @@ def build_session(
             builder = builder.config(mapped, str(v))
     spark = builder.getOrCreate()
     return ensure_session_confs(spark)
+
+
+# Driver confs every local session of the bench, the tests and the tools
+# runs with, so an A/B or a profile measures the bench's configuration.
+LOCAL_DRIVER_CONFS = {
+    "spark.ui.enabled": "false",
+    # keep stdout clean: bench.py's artifact is its LAST stdout line, and
+    # progress-bar control chars must not precede it
+    "spark.ui.showConsoleProgress": "false",
+    # 8g, deliberately not larger: oversized heaps on virtualized hosts
+    # stall tens of seconds on first-touch page backing (measured: 32g
+    # heap -> intermittent 20-60s JVM freezes; 8g -> stable)
+    "spark.driver.memory": "8g",
+    # a long-lived JVM (the 70-query bench, the 1400-test suite) emits
+    # codegen classes far past the JDK 17 default 240m code-cache reserve
+    # (r9: 0.907x on the 70-query bench A/B)
+    "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=512m",
+}
+
+
+def local_cpus() -> int:
+    """Cores of a local session: ``$SPARK_GRAFT_CPUS``, else the CPUs this
+    process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def local_session(
+    app_name: str,
+    cpus: int | None = None,
+    shuffle_partitions: int = 16,
+    extra_conf: dict | None = None,
+) -> SparkSession:
+    """Build (or get) a ``local[cpus]`` session with ``LOCAL_DRIVER_CONFS``
+    and log level ERROR; ``extra_conf`` is applied last."""
+    spark = build_session(
+        shuffle_partitions=shuffle_partitions,
+        master=f"local[{cpus or local_cpus()}]",
+        app_name=app_name,
+        extra_conf={**LOCAL_DRIVER_CONFS, **(extra_conf or {})},
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark

@@ -24,6 +24,7 @@ _SMOKE_MODULES = {
     "test_harness_strictness",
     "test_knife_edge",
     "test_cluster_guards",
+    "test_session_factory",
 }
 
 # one oracle entry per family (relational agg, join, window, dedup-exact,
@@ -64,28 +65,9 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from datafusion_ballista_python_spark.session import local_session
 
-    s = (
-        SparkSession.builder.master("local[8]")
-        .appName("tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        # a 1300-test suite in one JVM emits codegen classes far past the
-        # JDK 17 default 240m code-cache reserve; same measured fix as
-        # bench.py (r9: 0.907x on the 70-query bench A/B)
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=512m",
-        )
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("ERROR")
-    from datafusion_ballista_python_spark.session import ensure_session_confs
-
-    ensure_session_confs(s)
-    yield s
+    return local_session("tests", cpus=8, shuffle_partitions=8)
 
 
 @pytest.fixture(scope="session")

@@ -1,0 +1,80 @@
+"""One way to build a local session (``session.local_session``).
+
+Every session of the bench, the tests and ``tools/`` is built by
+``session.py``, so none of them can drift from the driver confs the
+bench measures with (the code-cache flag above all).  The event-log
+parser these sessions feed (``tools.profile_stages.parse_event_log``) is
+pinned here on a synthetic log, Spark-free.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+
+from datafusion_ballista_python_spark.session import LOCAL_DRIVER_CONFS
+from tools.profile_stages import parse_event_log
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_session_builder_only_in_session_module():
+    needle = "SparkSession" + ".builder"
+    tracked = subprocess.run(
+        ["git", "ls-files", "*.py"], cwd=_REPO, capture_output=True, text=True,
+        check=True,
+    ).stdout.split()
+    assert tracked
+    offenders = []
+    for rel in tracked:
+        with open(os.path.join(_REPO, rel), errors="replace") as fh:
+            if needle in fh.read():
+                offenders.append(rel)
+    assert offenders == ["datafusion_ballista_python_spark/session.py"]
+
+
+def test_suite_session_carries_local_driver_confs(spark):
+    conf = spark.sparkContext.getConf()
+    # Spark prepends its own module flags to extraJavaOptions: check the
+    # driver JVM's actual arguments for ours
+    jvm_args = set(
+        spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+        .getInputArguments()
+    )
+    java_opts = LOCAL_DRIVER_CONFS["spark.driver.extraJavaOptions"].split()
+    assert "-XX:ReservedCodeCacheSize=512m" in java_opts
+    assert set(java_opts) <= jvm_args
+    for key, value in LOCAL_DRIVER_CONFS.items():
+        if key != "spark.driver.extraJavaOptions":
+            assert conf.get(key) == value, key
+
+
+def test_parse_event_log_job_times(tmp_path):
+    events = [
+        {"Event": "SparkListenerJobStart", "Job ID": 0, "Submission Time": 1000,
+         "Stage IDs": [0, 1], "Properties": {"spark.job.description": "profile:q"}},
+        {"Event": "SparkListenerStageCompleted", "Stage Info": {
+            "Stage ID": 1, "Stage Name": "collect at x.py:1", "Number of Tasks": 1,
+            "Submission Time": 1100, "Completion Time": 1400}},
+        {"Event": "SparkListenerTaskEnd", "Stage ID": 1, "Task Info": {
+            "Launch Time": 1100, "Finish Time": 1300},
+         "Task Metrics": {"Executor Run Time": 150}},
+        {"Event": "SparkListenerJobStart", "Job ID": 1, "Submission Time": 2000,
+         "Stage IDs": [2], "Properties": {}},
+    ]
+    log = tmp_path / "eventlog_v2_app"
+    log.mkdir()
+    # the job's end is in a second rolled file, as Spark 4 may write it
+    (log / "events_1_app").write_text("\n".join(json.dumps(e) for e in events))
+    (log / "events_2_app").write_text(json.dumps(
+        {"Event": "SparkListenerJobEnd", "Job ID": 0, "Completion Time": 1500}))
+
+    parsed = parse_event_log(str(tmp_path))
+    assert parsed["jobs"][0]["description"] == "profile:q"
+    assert parsed["jobs"][0]["stage_ids"] == [0, 1]
+    assert parsed["jobs"][0]["wall_ms"] == 500
+    assert parsed["jobs"][1]["description"] is None
+    assert parsed["jobs"][1]["wall_ms"] is None  # never ended
+    assert parsed["stages"][1]["wall_ms"] == 300
+    assert parsed["stages"][1]["exec_run_ms"] == 150

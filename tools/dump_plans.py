@@ -28,24 +28,12 @@ def main() -> None:
             names.append(args[i])
             i += 1
 
-    from pyspark.sql import SparkSession
+    from datafusion_ballista_python_spark.session import local_session
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("dump_plans")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("dump_plans")
     from datafusion_ballista_python_spark.corpus import load_all
-    from datafusion_ballista_python_spark.session import ensure_session_confs
 
-    ensure_session_confs(spark)
     registry = load_all()
     os.makedirs(out_dir, exist_ok=True)
     for name in names:

@@ -55,25 +55,22 @@ SMOKE = [
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
-    from pyspark.sql import SparkSession
+    from datafusion_ballista_python_spark.corpus import load_all
+    from datafusion_ballista_python_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master("local-cluster[2,4,4096]")
-        .appName("local-cluster-smoke")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "2g")
-        # executors are separate JVMs: they must find the same Python
-        .config("spark.executorEnv.PYSPARK_PYTHON", sys.executable)
-        .getOrCreate()
+    spark = build_session(
+        shuffle_partitions=8,
+        master="local-cluster[2,4,4096]",
+        app_name="local-cluster-smoke",
+        extra_conf={
+            "spark.ui.enabled": "false",
+            "spark.ui.showConsoleProgress": "false",
+            "spark.driver.memory": "2g",
+            # executors are separate JVMs: they must find the same Python
+            "spark.executorEnv.PYSPARK_PYTHON": sys.executable,
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    from datafusion_ballista_python_spark.corpus import load_all
-    from datafusion_ballista_python_spark.session import ensure_session_confs
-
-    ensure_session_confs(spark)
     registry = load_all()
 
     results: dict[str, dict] = {}

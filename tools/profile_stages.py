@@ -1,17 +1,26 @@
 #!/usr/bin/env python
-"""Per-STAGE decomposition from the Spark event log (headless host — no UI).
+"""Per-query profile from the Spark event log (headless host — no UI).
 
 Usage:
-    python tools/profile_stages.py <query> [<query> ...] [--sf DIR] [--out F]
+    python tools/profile_stages.py [<query> ...] [--sf DIR] [--out F]
 
-For each named corpus entry: run it once under the bench config with the
-noop sink (guide §1.4) and a job description label, then parse the event
-log for per-stage wall, task count, executor run time, shuffle read/write
-bytes+records, spill, and the max/median task skew ratio of the stage's
-shuffle-read records (guide §2.5: max/median above ~5-10x = skew).
+With no query names it profiles every ``bench.HEADLINE`` entry.  Each
+entry is warmed once at sf0.001, then built and run once at ``--sf``
+(default sf0.1) in the bench's session (``session.local_session``) with
+the noop sink (guide §1.4: computes every column, unlike count()).  Every
+job the entry starts, its build's jobs included, carries the job
+description ``profile:<query>``.  Per query the report (``--out``) holds:
+
+- ``build_sec`` and ``wall_sec``: the DataFrame build, and the noop-sink run;
+- ``jobs``: each job's id, stage ids and ``wall_ms`` (JobStart to JobEnd);
+- ``stages``: per stage wall, task count, executor run time, shuffle
+  read/write bytes+records, spill, and the max/median task skew ratio of
+  the stage's shuffle-read records (guide §2.5: max/median above ~5-10x =
+  skew);
+- ``plan``: the formatted physical plan.
 
 The event-log parser is importable (``parse_event_log``) so the skew
-straggler check reuses it.
+straggler check and ``perfbench`` reuse it.
 """
 from __future__ import annotations
 
@@ -28,9 +37,11 @@ def parse_event_log(log_dir: str) -> dict:
     """Parse every event-log file under ``log_dir``.
 
     Returns {"stages": {stage_id: {...}}, "jobs": {job_id: {"description",
-    "stage_ids"}}} with per-stage aggregates from TaskEnd metrics."""
+    "stage_ids", "submit_ms", "end_ms", "wall_ms"}}} with per-stage
+    aggregates from TaskEnd metrics."""
     stages: dict[int, dict] = {}
     jobs: dict[int, dict] = {}
+    job_ends: dict[int, int] = {}  # kept apart: rolled files come unordered
     paths = []
     for dirpath, _dirnames, filenames in os.walk(log_dir):
         for fn in filenames:
@@ -55,7 +66,10 @@ def parse_event_log(log_dir: str) -> dict:
                             "spark.job.description"
                         ),
                         "stage_ids": ev.get("Stage IDs", []),
+                        "submit_ms": ev.get("Submission Time"),
                     }
+                elif kind == "SparkListenerJobEnd":
+                    job_ends[ev["Job ID"]] = ev.get("Completion Time")
                 elif kind == "SparkListenerStageCompleted":
                     si = ev["Stage Info"]
                     st = stages.setdefault(si["Stage ID"], {"tasks": []})
@@ -89,6 +103,10 @@ def parse_event_log(log_dir: str) -> dict:
                             ),
                         }
                     )
+    for jid, job in jobs.items():
+        sub, end = job["submit_ms"], job_ends.get(jid)
+        job["end_ms"] = end
+        job["wall_ms"] = (end - sub) if sub and end else None
     # aggregate per stage
     for sid, st in stages.items():
         ts = st.pop("tasks")
@@ -121,31 +139,19 @@ def parse_event_log(log_dir: str) -> dict:
 
 
 def build_profiling_session(app: str, log_dir: str, extra: dict | None = None):
-    from pyspark.sql import SparkSession
+    """The bench's local session, writing an uncompressed event log to
+    ``log_dir`` (``parse_event_log`` reads the plain JSON stream)."""
+    from datafusion_ballista_python_spark.session import local_session
 
-    b = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "8g")
-        .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=512m")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", f"file://{log_dir}")
-        .config("spark.eventLog.compress", "false")
+    return local_session(
+        app,
+        extra_conf={
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": f"file://{log_dir}",
+            "spark.eventLog.compress": "false",
+            **(extra or {}),
+        },
     )
-    for k, v in (extra or {}).items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    from datafusion_ballista_python_spark.session import ensure_session_confs
-
-    ensure_session_confs(spark)
-    return spark
 
 
 def main() -> None:
@@ -160,14 +166,20 @@ def main() -> None:
             out = sys.argv[i + 1]
             args = [x for x in args if x != out]
 
-    log_dir = tempfile.mkdtemp(prefix="spark-events-")
-    spark = build_profiling_session("profile_stages", log_dir)
+    import bench
     from datafusion_ballista_python_spark.corpus import load_all
+    from datafusion_ballista_python_spark.plans import explain_formatted
 
     registry = load_all()
-    sc = spark.sparkContext
+    names = args or [n for n in bench.HEADLINE if n in registry]
+    unknown = sorted(set(names) - set(registry))
+    if unknown:
+        sys.exit(f"profile_stages: unknown corpus entries {unknown}")
 
-    for name in args:  # JIT warm at the smallest SF
+    log_dir = tempfile.mkdtemp(prefix="spark-events-")
+    spark = build_profiling_session("profile_stages", log_dir)
+    sc = spark.sparkContext
+    for name in names:  # JIT warm at the smallest SF
         try:
             registry[name].fn(spark, "/root/testdata/sf0.001").write.format(
                 "noop"
@@ -175,29 +187,47 @@ def main() -> None:
         except Exception:
             pass
 
-    walls: dict[str, float] = {}
-    for name in args:
+    timed: dict[str, tuple[float, float, str]] = {}
+    for name in names:
         spark.catalog.clearCache()
-        df = registry[name].fn(spark, sf_dir)
         sc.setJobDescription(f"profile:{name}")
         t0 = time.perf_counter()
+        df = registry[name].fn(spark, sf_dir)
+        t1 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
-        walls[name] = round(time.perf_counter() - t0, 3)
+        t2 = time.perf_counter()
         sc.setJobDescription(None)
+        timed[name] = (round(t1 - t0, 3), round(t2 - t1, 3), explain_formatted(df))
     spark.stop()
 
     parsed = parse_event_log(log_dir)
     report = {"sf_dir": sf_dir, "queries": {}}
-    for name in args:
-        q_stages = {}
-        for jid, j in sorted(parsed["jobs"].items()):
-            if j["description"] == f"profile:{name}":
-                for sid in j["stage_ids"]:
-                    st = parsed["stages"].get(sid)
-                    if st and "exec_run_ms" in st:
-                        q_stages[sid] = st
-        report["queries"][name] = {"wall_sec": walls[name], "stages": q_stages}
-        print(f"== {name}: wall {walls[name]:.3f}s, {len(q_stages)} stages")
+    for name in names:
+        build_sec, wall_sec, plan = timed[name]
+        jobs = [
+            {"id": jid, "wall_ms": j.get("wall_ms"), "stage_ids": j["stage_ids"]}
+            for jid, j in sorted(parsed["jobs"].items())
+            if j.get("description") == f"profile:{name}"
+        ]
+        q_stages = {
+            sid: parsed["stages"][sid]
+            for j in jobs
+            for sid in j["stage_ids"]
+            if "exec_run_ms" in parsed["stages"].get(sid, {})
+        }
+        report["queries"][name] = {
+            "build_sec": build_sec,
+            "wall_sec": wall_sec,
+            "jobs": jobs,
+            "stages": q_stages,
+            "plan": plan,
+        }
+        print(
+            f"== {name}: build {build_sec:.3f}s, wall {wall_sec:.3f}s,"
+            f" {len(jobs)} jobs, {len(q_stages)} stages"
+        )
+        for j in jobs:
+            print(f"   job {j['id']}: {j['wall_ms']}ms stages={j['stage_ids']}")
         for sid in sorted(q_stages):
             st = q_stages[sid]
             print(

@@ -24,23 +24,10 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = sys.argv[2:] or None
 
-    from pyspark.sql import SparkSession
-
-    from datafusion_ballista_python_spark.session import ensure_session_confs
+    from datafusion_ballista_python_spark.session import local_session
     from tests.oracle_harness import run_all
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '16')}]"
-        )
-        .appName("replay-oracle")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    ensure_session_confs(spark)
+    spark = local_session("replay-oracle")
 
     results = run_all(spark, sf_dir, only=only)
     if only:

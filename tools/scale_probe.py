@@ -70,25 +70,10 @@ def main() -> int:
     else:
         ops = OPS
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .appName("scale-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
     from datafusion_ballista_python_spark.corpus import load_all
-    from datafusion_ballista_python_spark.session import ensure_session_confs
+    from datafusion_ballista_python_spark.session import local_session
 
-    ensure_session_confs(spark)
+    spark = local_session("scale-probe", shuffle_partitions=32)
     registry = load_all()
 
     # JIT warmup at the smallest SF so codegen compilation is excluded

@@ -56,26 +56,22 @@ def main() -> int:
         executor = Executor(concurrent_tasks=4)
         executor.start(master_url=master.url)
 
-        from pyspark.sql import SparkSession
-
         from datafusion_ballista_python_spark.corpus import load_all
-        from datafusion_ballista_python_spark.session import (
-            ensure_session_confs,
-        )
+        from datafusion_ballista_python_spark.session import build_session
 
-        spark = (
-            SparkSession.builder.master(master.url)
-            .appName("standalone-smoke")
-            .config("spark.sql.shuffle.partitions", "8")
-            .config("spark.ui.enabled", "false")
-            .config("spark.ui.showConsoleProgress", "false")
-            .config("spark.driver.memory", "2g")
-            .config("spark.executor.memory", "1g")
-            .config("spark.executorEnv.PYSPARK_PYTHON", sys.executable)
-            .getOrCreate()
+        spark = build_session(
+            shuffle_partitions=8,
+            master=master.url,
+            app_name="standalone-smoke",
+            extra_conf={
+                "spark.ui.enabled": "false",
+                "spark.ui.showConsoleProgress": "false",
+                "spark.driver.memory": "2g",
+                "spark.executor.memory": "1g",
+                "spark.executorEnv.PYSPARK_PYTHON": sys.executable,
+            },
         )
         spark.sparkContext.setLogLevel("ERROR")
-        ensure_session_confs(spark)
 
         # wait until the worker has registered and an executor is up:
         # the first job would otherwise just queue (fine) but a hang here

@@ -381,25 +381,21 @@ def audit(sf_dir: str, only: list[str] | None = None, spark=None) -> dict:
     session to reuse it (it is NOT stopped — critical for test callers:
     ``getOrCreate()`` hands back any live session, and stopping a
     borrowed one kills every later test sharing the fixture)."""
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     from datafusion_ballista_python_spark.corpus import load_all
-    from datafusion_ballista_python_spark.session import ensure_session_confs
+    from datafusion_ballista_python_spark.session import (
+        ensure_session_confs,
+        local_session,
+    )
 
     owns_session = spark is None
     if owns_session:
-        spark = (
-            SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '16')}]")
-            .appName("vacuity-audit")
-            .config("spark.sql.shuffle.partitions", "16")
-            .config("spark.ui.enabled", "false")
-            .config("spark.driver.memory", "8g")
-            .getOrCreate()
-        )
-    spark.sparkContext.setLogLevel("ERROR")
-    ensure_session_confs(spark)
+        spark = local_session("vacuity-audit")
+    else:
+        spark.sparkContext.setLogLevel("ERROR")
+        ensure_session_confs(spark)
 
     registry = load_all()
     names = [n for n in registry if only is None or n in only]
