@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Benchmark: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-``session.local_session`` (local[$SPARK_GRAFT_CPUS], default the CPUs this
+``session.build_session`` (local[$SPARK_GRAFT_CPUS], default the CPUs this
 process may run on).  Prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -313,38 +313,12 @@ def main() -> None:
         return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from datafusion_ballista_python_spark.corpus import load_all
-    from datafusion_ballista_python_spark.session import local_cpus, local_session
+    from datafusion_ballista_python_spark.session import build_session, local_cpus
 
     cpus = local_cpus()
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
-    # Scaling-probe mode (r11 verdict item #2): the default 16 shuffle
-    # partitions keep BASELINE.md reference parity for the headline
-    # artifact, but they also saturate at 8 cores on sf0.1 stages, so the
-    # driver's low-core/high-core probe reads ~1 everywhere
-    # (PERF_r11.json scaling block, suspect_cpus_ignored).  Under
-    # SPARK_GRAFT_SCALING=1 the shuffle partition count is pinned at a
-    # FIXED 64 (= 2x the high core count) for EVERY core count, so the
-    # low/high-core comparison varies exactly one thing — cores.  (The
-    # first formulation, partitions = 2x cpus per run, conflated task
-    # count with core count: the c8/16-partition run beat the
-    # c32/64-partition run outright because sf0.1 stages are scheduling-
-    # overhead-bound, plans/r12/BENCH_scaling_*.  A fixed task count
-    # exposes the core effect; a still-flat ratio then means the query
-    # genuinely has less than 8 cores of work at this SF, which is the
-    # honest reading, not a harness artifact.)  The headline run (flag
-    # unset) is byte-compatible with every previous round.
-    scaling = os.environ.get("SPARK_GRAFT_SCALING") == "1"
-    try:
-        shuffle_parts = (
-            int(os.environ.get("SPARK_GRAFT_SCALING_PARTS", "64"))
-            if scaling
-            else 16
-        )
-    except ValueError:
-        shuffle_parts = 16
-
-    spark = local_session("bench", cpus=cpus, shuffle_partitions=shuffle_parts)
+    spark = build_session(app_name="bench")
     registry = load_all()
 
     # JIT warmup: run every headline query once at the smallest SF so
@@ -434,8 +408,6 @@ def main() -> None:
                 "repeats": repeats,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 "cpus": cpus,
-                **({"scaling": 1, "shuffle_partitions": shuffle_parts}
-                   if scaling else {}),
             },
             fh,
             indent=1,
@@ -461,10 +433,6 @@ def main() -> None:
         "repeats": repeats,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "cpus": cpus,
-        # only present under SPARK_GRAFT_SCALING=1 — the headline line is
-        # byte-compatible with previous rounds when the flag is unset
-        **({"scaling": 1, "shuffle_partitions": shuffle_parts}
-           if scaling else {}),
     }
     # Degradation ladder: the driver records only the last ~2000 chars of
     # stdout, so the line must fit.  Shed information in order of least

@@ -105,7 +105,9 @@ def main(argv: Optional[list[str]] = None, ctx=None) -> int:
         prog="ballista-cli",
         description="SQL shell with ballista-cli surface (reference cli.md)",
     )
-    p.add_argument("--master", default="local[*]", help="Spark master")
+    p.add_argument(
+        "--master", default=None, help="Spark master (default local[<cpus>])"
+    )
     p.add_argument("--shuffle-partitions", type=int, default=16)
     p.add_argument("--batch-size", type=int, default=8192)
     p.add_argument("-n", "--num-rows", type=int, default=100, help="rows to print")

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import os
 
-from .session import build_session
+from .session import build_session, local_cpus
 
 
 class Scheduler:
@@ -60,8 +60,7 @@ class Scheduler:
                     "start() to relaunch"
                 )
             return self._process.url
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        return f"local[{cpus}]"
+        return f"local[{local_cpus()}]"
 
     def start(self, port: int | None = None) -> "StandaloneProcess":
         """Start the scheduler as a REAL server process (reference
@@ -100,9 +99,10 @@ class Executor:
     """Embedded-executor shim (reference ``src/executor.rs:29-75``).
 
     Reference defaults recorded: ``concurrent_tasks`` defaults to all cores
-    (tuning-guide.md:53-54), shuffle job-data TTL 3600 s with cleanup every
-    1800 s (executor.rs:67-68).  Spark's shuffle service manages lifecycle;
-    local-mode concurrency comes from the master thread count.
+    (tuning-guide.md:53-54; here ``session.local_cpus()``), shuffle
+    job-data TTL 3600 s with cleanup every 1800 s (executor.rs:67-68).
+    Spark's shuffle service manages lifecycle; local-mode concurrency
+    comes from the master thread count.
     """
 
     def __init__(
@@ -119,7 +119,7 @@ class Executor:
         self.bind_host = bind_host
         self.bind_port = bind_port
         self.grpc_port = grpc_port
-        self.concurrent_tasks = concurrent_tasks or os.cpu_count()
+        self.concurrent_tasks = concurrent_tasks or local_cpus()
         self.job_data_ttl_seconds = 3600
         self.job_data_clean_up_interval_seconds = 1800
         self._process = None

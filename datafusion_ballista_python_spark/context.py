@@ -5,7 +5,9 @@ Reference parity (``src/context.rs:41-172``): constructor knobs
 ``sql()``.  ``host``/``port`` selected a remote Ballista scheduler; on Spark
 the scheduler is the driver itself, so they are accepted for API
 compatibility and recorded but a local/attached SparkSession is used
-(SURVEY §2.12: Spark driver == scheduler, executors == executors).
+(SURVEY §2.12: Spark driver == scheduler, executors == executors).  Without
+``spark`` the session comes from ``session.build_session``, the same builder
+the bench and the tests use.
 """
 
 from __future__ import annotations

@@ -11,10 +11,13 @@ the scale-oriented defaults we want on every session:
 - Arrow-accelerated Python boundary;
 - parquet filter pushdown + partition pruning left at Spark defaults (on).
 
+``build_session`` is the one way anything in this repo builds a session:
+``BallistaContext()``, the CLI, ``Scheduler.session()``, the bench, the
+tests and ``tools/``.  It applies ``DRIVER_CONFS`` to every session, defaults
+the master to ``local[local_cpus()]`` and sets the log level to ERROR, so
+what the bench and the tests measure is what a user runs.
 ``ensure_session_confs(spark)`` is idempotent and safe to call on a session we
 did not create (the correctness driver passes us its own session).
-``local_session`` is the one way the bench, the tests and ``tools/`` build a
-local session; the cluster smokes call ``build_session`` with their master.
 """
 
 from __future__ import annotations
@@ -56,13 +59,11 @@ _RUNTIME_CONFS = {
     # collapses them to fewer advisory-sized tasks.  An interleaved
     # 12-query min-of-3 A/B on the local bench measured "true" 5.6%
     # faster overall (window-heavy queries like the SCD2 pipeline lose
-    # the most under "false"), so the local default follows the
-    # measurement and the upstream default; set
-    # SPARK_GRAFT_PARALLELISM_FIRST=false on production clusters where
-    # the guide's size-based policy is preferred.
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst": (
-        os.environ.get("SPARK_GRAFT_PARALLELISM_FIRST", "true")
-    ),
+    # the most under "false"), so the default follows the measurement and
+    # the upstream default; production clusters that prefer the guide's
+    # size-based policy call ``ctx.set_conf(
+    # "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")``.
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow-batched Python boundary (UDFs, toPandas, createDataFrame)
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -132,45 +133,9 @@ def _ship_package(spark: SparkSession) -> None:
         pass  # already added under another name / restricted deployment
 
 
-def translate_conf(key: str) -> str | None:
-    """Map a ballista/datafusion conf key to a Spark conf key (or None)."""
-    return CONF_TRANSLATION.get(key, key if key.startswith("spark.") else None)
-
-
-def build_session(
-    shuffle_partitions: int = 16,
-    batch_size: int = 8192,
-    master: str | None = None,
-    app_name: str = "datafusion_ballista_python_spark",
-    extra_conf: dict | None = None,
-) -> SparkSession:
-    """Build (or get) a SparkSession with reference-default parity.
-
-    ``shuffle_partitions`` / ``batch_size`` defaults mirror the reference
-    context (``src/context.rs:42``: 16 / 8192).
-    """
-    builder = SparkSession.builder.appName(app_name)
-    if master:
-        builder = builder.master(master)
-    builder = (
-        builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size))
-        # static conf, must be set before the JVM session exists: makes the
-        # Thrift JDBC endpoint (endpoint.py) share THIS session so
-        # registered temp views are visible to JDBC clients
-        .config("spark.sql.hive.thriftServer.singleSession", "true")
-    )
-    for k, v in (extra_conf or {}).items():
-        mapped = translate_conf(k)
-        if mapped:
-            builder = builder.config(mapped, str(v))
-    spark = builder.getOrCreate()
-    return ensure_session_confs(spark)
-
-
-# Driver confs every local session of the bench, the tests and the tools
-# runs with, so an A/B or a profile measures the bench's configuration.
-LOCAL_DRIVER_CONFS = {
+# Driver confs of every session, so an A/B, a profile, the tests and a user
+# all run the configuration the bench measures.
+DRIVER_CONFS = {
     "spark.ui.enabled": "false",
     # keep stdout clean: bench.py's artifact is its LAST stdout line, and
     # progress-bar control chars must not precede it
@@ -192,19 +157,39 @@ def local_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
-def local_session(
-    app_name: str,
-    cpus: int | None = None,
+def translate_conf(key: str) -> str | None:
+    """Map a ballista/datafusion conf key to a Spark conf key (or None)."""
+    return CONF_TRANSLATION.get(key, key if key.startswith("spark.") else None)
+
+
+def build_session(
     shuffle_partitions: int = 16,
+    batch_size: int = 8192,
+    master: str | None = None,
+    app_name: str = "datafusion_ballista_python_spark",
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Build (or get) a ``local[cpus]`` session with ``LOCAL_DRIVER_CONFS``
-    and log level ERROR; ``extra_conf`` is applied last."""
-    spark = build_session(
-        shuffle_partitions=shuffle_partitions,
-        master=f"local[{cpus or local_cpus()}]",
-        app_name=app_name,
-        extra_conf={**LOCAL_DRIVER_CONFS, **(extra_conf or {})},
+    """Build (or get) a SparkSession with reference-default parity.
+
+    ``shuffle_partitions`` / ``batch_size`` defaults mirror the reference
+    context (``src/context.rs:42``: 16 / 8192).  ``master`` defaults to
+    ``local[local_cpus()]``; ``DRIVER_CONFS`` apply to every session, with
+    ``extra_conf`` applied last.  The log level is ERROR.
+    """
+    builder = (
+        SparkSession.builder.appName(app_name)
+        .master(master or f"local[{local_cpus()}]")
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size))
+        # static conf, must be set before the JVM session exists: makes the
+        # Thrift JDBC endpoint (endpoint.py) share THIS session so
+        # registered temp views are visible to JDBC clients
+        .config("spark.sql.hive.thriftServer.singleSession", "true")
     )
+    for k, v in {**DRIVER_CONFS, **(extra_conf or {})}.items():
+        mapped = translate_conf(k)
+        if mapped:
+            builder = builder.config(mapped, str(v))
+    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    return spark
+    return ensure_session_confs(spark)

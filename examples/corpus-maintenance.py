@@ -15,7 +15,6 @@ from datafusion_ballista_python_spark.sources.merge import snapshot_diff
 
 ctx = BallistaContext(master="local[4]", shuffle_partitions=4)
 spark = ctx.spark
-spark.sparkContext.setLogLevel("ERROR")
 
 docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 

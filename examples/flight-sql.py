@@ -12,7 +12,6 @@ from datafusion_ballista_python_spark import flightsql
 import pyarrow.flight as flight
 
 ctx = BallistaContext(master="local[4]", shuffle_partitions=4)
-ctx.spark.sparkContext.setLogLevel("ERROR")
 ctx.register_parquet("nation", "/root/testdata/sf0.001/nation.parquet")
 
 server = ctx.start_flightsql_endpoint(port=0)

@@ -21,7 +21,6 @@ print(scheduler)
 # the reference scheduler's REST/metrics surface (scheduler.md REST table,
 # metrics.md) is served from the driver session
 spark = scheduler.session(app_name="run-scheduler-example")
-spark.sparkContext.setLogLevel("ERROR")
 spark.sql("SELECT count(*) FROM range(1000)").collect()
 api = scheduler.start_api(spark, port=0)
 with urllib.request.urlopen(f"http://127.0.0.1:{api.port}/api/metrics") as r:

@@ -65,9 +65,9 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    from datafusion_ballista_python_spark.session import local_session
+    from datafusion_ballista_python_spark.session import build_session
 
-    return local_session("tests", cpus=8, shuffle_partitions=8)
+    return build_session(shuffle_partitions=8, master="local[8]", app_name="tests")
 
 
 @pytest.fixture(scope="session")

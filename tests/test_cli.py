@@ -20,6 +20,22 @@ def test_split_statements():
     assert got == ["SELECT 1", "SELECT 'a;b' AS s", "SELECT 2"]
 
 
+def test_default_master_left_to_session_builder(monkeypatch):
+    # no --master: BallistaContext gets None, so session.build_session picks
+    # local[local_cpus()] (pinned in tests/test_fresh_process.py)
+    seen = {}
+
+    class _Ctx:
+        def __init__(self, **kwargs):
+            seen.update(kwargs)
+
+    monkeypatch.setattr(
+        "datafusion_ballista_python_spark.context.BallistaContext", _Ctx
+    )
+    assert cli.main(["-c", ""]) == 0
+    assert seen["master"] is None
+
+
 def test_command_mode(ctx, capsys):
     rc = cli.main(["-c", "SELECT 1 AS a, 'x' AS b;"], ctx=ctx)
     out = capsys.readouterr().out

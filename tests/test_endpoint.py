@@ -39,7 +39,6 @@ def test_beeline_jdbc_end_to_end(tmp_path):
         import pyspark
 
         ctx = BallistaContext(master="local[2]", shuffle_partitions=2)
-        ctx.spark.sparkContext.setLogLevel("ERROR")
         ctx.register_parquet("ep_orders", "/root/testdata/sf0.001/orders.parquet")
         port = ctx.start_sql_endpoint(port=10191)
         beeline = os.path.join(os.path.dirname(pyspark.__file__), "bin", "beeline")

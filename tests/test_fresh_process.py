@@ -1,5 +1,5 @@
-"""Drivers in their own process: a driver started outside the repo root,
-``tools/profile_stages.py`` and ``tools/ab.py``.
+"""Drivers in their own process: ``BallistaContext()`` started outside the
+repo root, ``tools/profile_stages.py`` and ``tools/ab.py``.
 
 They run as subprocesses because a second SparkContext cannot exist in the
 suite's JVM.  Each uses ``SPARK_GRAFT_CPUS=2`` and the cheap ``fn_math``
@@ -29,26 +29,47 @@ def _run(args, cwd=_REPO, timeout=600):
 
 def test_python_workers_import_package_from_foreign_cwd(tmp_path, sf_dir):
     # udaf_geomean runs its accumulator in Python workers, which see the
-    # driver's cwd and PYTHONPATH but not its sys.path edits
+    # driver's cwd and PYTHONPATH but not its sys.path edits.  The session
+    # is the product default, BallistaContext() with no arguments, so the
+    # same driver shows what a user gets: the bench's core rule and confs.
     probe = tmp_path / "probe.py"
     probe.write_text(textwrap.dedent(f"""
         import json, sys
         sys.path.insert(0, {_REPO!r})
+        from datafusion_ballista_python_spark import BallistaContext
+        from datafusion_ballista_python_spark.cluster import Executor, Scheduler
         from datafusion_ballista_python_spark.corpus import load_all
-        from datafusion_ballista_python_spark.session import local_session
+        from datafusion_ballista_python_spark.session import DRIVER_CONFS
         from tests.oracle_harness import compare, duckdb_con
 
-        spark = local_session("foreign-cwd", shuffle_partitions=4)
+        spark = BallistaContext().spark
+        sc = spark.sparkContext
+        jvm = spark._jvm.java.lang
         spec = load_all()["udaf_geomean"]
         con = duckdb_con({sf_dir!r})
         ok, msg = compare(spec.fn(spark, {sf_dir!r}), con.sql(spec.oracle).df())
+        out = {{
+            "ok": ok, "msg": msg, "master": sc.master,
+            "scheduler_master": Scheduler().master_url,
+            "executor_tasks": Executor().concurrent_tasks,
+            "missing_confs": [k for k in DRIVER_CONFS if not sc.getConf().contains(k)],
+            "jvm_args": list(jvm.management.ManagementFactory.getRuntimeMXBean()
+                             .getInputArguments()),
+            "max_memory": jvm.Runtime.getRuntime().maxMemory(),
+        }}
         spark.stop()
-        print(json.dumps({{"ok": ok, "msg": msg}}))
+        print(json.dumps(out))
     """))
     proc = _run([sys.executable, str(probe)], cwd=tmp_path)
     assert proc.returncode == 0, proc.stderr[-3000:]
     out = json.loads(proc.stdout.splitlines()[-1])
     assert out["ok"], out["msg"]
+    assert out["master"] == "local[2]"
+    assert out["scheduler_master"] == "local[2]"
+    assert out["executor_tasks"] == 2
+    assert out["missing_confs"] == []
+    assert "-XX:ReservedCodeCacheSize=512m" in out["jvm_args"]
+    assert out["max_memory"] > 4 << 30
 
 
 def test_profile_stages_report(tmp_path, sf_dir):

@@ -1,10 +1,12 @@
-"""One way to build a local session (``session.local_session``).
+"""One way to build a session (``session.build_session``).
 
-Every session of the bench, the tests and ``tools/`` is built by
-``session.py``, so none of them can drift from the driver confs the
-bench measures with (the code-cache flag above all).  The event-log
-parser these sessions feed (``tools.profile_stages.parse_event_log``) is
-pinned here on a synthetic log, Spark-free.
+Every session of ``BallistaContext``, the CLI, ``Scheduler``, the bench,
+the tests and ``tools/`` is built by ``session.py``, so none of them can
+drift from the driver confs the bench measures with (the code-cache flag
+above all), its core count or its log level.  ``BallistaContext.set_conf``
+still overrides a session conf afterwards.  The event-log parser these
+sessions feed (``tools.profile_stages.parse_event_log``) is pinned here on
+a synthetic log, Spark-free.
 """
 
 from __future__ import annotations
@@ -13,25 +15,41 @@ import json
 import os
 import subprocess
 
-from datafusion_ballista_python_spark.session import LOCAL_DRIVER_CONFS
+from datafusion_ballista_python_spark.session import DRIVER_CONFS
 from tools.profile_stages import parse_event_log
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_session_builder_only_in_session_module():
-    needle = "SparkSession" + ".builder"
+    # what only the builder may do: build a session, set its log level,
+    # switch its UI, read the core count.  perfbench/ drives the engine the
+    # way a user script would and is not part of the package.
+    session = "datafusion_ballista_python_spark/session.py"
+    builder = "SparkSession" + ".builder"
+    needles = [
+        builder,
+        "setLog" + "Level",
+        '"spark.ui' + '.enabled"',
+        'os.environ.get("SPARK_GRAFT' + '_CPUS"',
+        'os.environ["SPARK_GRAFT' + '_CPUS"]',
+    ]
     tracked = subprocess.run(
         ["git", "ls-files", "*.py"], cwd=_REPO, capture_output=True, text=True,
         check=True,
     ).stdout.split()
     assert tracked
-    offenders = []
+    found = {needle: [] for needle in needles}
     for rel in tracked:
+        if rel.startswith("perfbench/"):
+            continue
         with open(os.path.join(_REPO, rel), errors="replace") as fh:
-            if needle in fh.read():
-                offenders.append(rel)
-    assert offenders == ["datafusion_ballista_python_spark/session.py"]
+            text = fh.read()
+        for needle in needles:
+            if needle in text:
+                found[needle].append(rel)
+    assert found[builder] == [session]
+    assert {rel for files in found.values() for rel in files} == {session}, found
 
 
 def test_suite_session_carries_local_driver_confs(spark):
@@ -42,10 +60,10 @@ def test_suite_session_carries_local_driver_confs(spark):
         spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
         .getInputArguments()
     )
-    java_opts = LOCAL_DRIVER_CONFS["spark.driver.extraJavaOptions"].split()
+    java_opts = DRIVER_CONFS["spark.driver.extraJavaOptions"].split()
     assert "-XX:ReservedCodeCacheSize=512m" in java_opts
     assert set(java_opts) <= jvm_args
-    for key, value in LOCAL_DRIVER_CONFS.items():
+    for key, value in DRIVER_CONFS.items():
         if key != "spark.driver.extraJavaOptions":
             assert conf.get(key) == value, key
 
@@ -78,3 +96,20 @@ def test_parse_event_log_job_times(tmp_path):
     assert parsed["jobs"][1]["wall_ms"] is None  # never ended
     assert parsed["stages"][1]["wall_ms"] == 300
     assert parsed["stages"][1]["exec_run_ms"] == 150
+
+
+def test_set_conf_overrides_session_conf(ctx):
+    # the production override of a DRIVER_CONFS / _RUNTIME_CONFS default;
+    # the suite shares this session, so both values are put back
+    spark = ctx.spark
+    policy = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
+    keys = ("spark.sql.shuffle.partitions", policy)
+    before = {key: spark.conf.get(key) for key in keys}
+    try:
+        ctx.set_conf("ballista.shuffle.partitions", 7)
+        ctx.set_conf(policy, "false")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+        assert spark.conf.get(policy) == "false"
+    finally:
+        for key, value in before.items():
+            spark.conf.set(key, value)

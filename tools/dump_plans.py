@@ -28,10 +28,10 @@ def main() -> None:
             names.append(args[i])
             i += 1
 
-    from datafusion_ballista_python_spark.session import local_session
+    from datafusion_ballista_python_spark.session import build_session
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = local_session("dump_plans")
+    spark = build_session(app_name="dump_plans")
     from datafusion_ballista_python_spark.corpus import load_all
 
     registry = load_all()

@@ -63,14 +63,11 @@ def main() -> int:
         master="local-cluster[2,4,4096]",
         app_name="local-cluster-smoke",
         extra_conf={
-            "spark.ui.enabled": "false",
-            "spark.ui.showConsoleProgress": "false",
             "spark.driver.memory": "2g",
             # executors are separate JVMs: they must find the same Python
             "spark.executorEnv.PYSPARK_PYTHON": sys.executable,
         },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     registry = load_all()
 
     results: dict[str, dict] = {}

@@ -6,7 +6,7 @@ Usage:
 
 With no query names it profiles every ``bench.HEADLINE`` entry.  Each
 entry is warmed once at sf0.001, then built and run once at ``--sf``
-(default sf0.1) in the bench's session (``session.local_session``) with
+(default sf0.1) in the bench's session (``session.build_session``) with
 the noop sink (guide §1.4: computes every column, unlike count()).  Every
 job the entry starts, its build's jobs included, carries the job
 description ``profile:<query>``.  Per query the report (``--out``) holds:
@@ -141,10 +141,10 @@ def parse_event_log(log_dir: str) -> dict:
 def build_profiling_session(app: str, log_dir: str, extra: dict | None = None):
     """The bench's local session, writing an uncompressed event log to
     ``log_dir`` (``parse_event_log`` reads the plain JSON stream)."""
-    from datafusion_ballista_python_spark.session import local_session
+    from datafusion_ballista_python_spark.session import build_session
 
-    return local_session(
-        app,
+    return build_session(
+        app_name=app,
         extra_conf={
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": f"file://{log_dir}",

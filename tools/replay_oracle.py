@@ -24,10 +24,10 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = sys.argv[2:] or None
 
-    from datafusion_ballista_python_spark.session import local_session
+    from datafusion_ballista_python_spark.session import build_session
     from tests.oracle_harness import run_all
 
-    spark = local_session("replay-oracle")
+    spark = build_session(app_name="replay-oracle")
 
     results = run_all(spark, sf_dir, only=only)
     if only:

@@ -71,9 +71,9 @@ def main() -> int:
         ops = OPS
 
     from datafusion_ballista_python_spark.corpus import load_all
-    from datafusion_ballista_python_spark.session import local_session
+    from datafusion_ballista_python_spark.session import build_session
 
-    spark = local_session("scale-probe", shuffle_partitions=32)
+    spark = build_session(shuffle_partitions=32, app_name="scale-probe")
     registry = load_all()
 
     # JIT warmup at the smallest SF so codegen compilation is excluded

@@ -64,14 +64,11 @@ def main() -> int:
             master=master.url,
             app_name="standalone-smoke",
             extra_conf={
-                "spark.ui.enabled": "false",
-                "spark.ui.showConsoleProgress": "false",
                 "spark.driver.memory": "2g",
                 "spark.executor.memory": "1g",
                 "spark.executorEnv.PYSPARK_PYTHON": sys.executable,
             },
         )
-        spark.sparkContext.setLogLevel("ERROR")
 
         # wait until the worker has registered and an executor is up:
         # the first job would otherwise just queue (fine) but a hang here

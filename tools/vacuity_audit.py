@@ -386,15 +386,14 @@ def audit(sf_dir: str, only: list[str] | None = None, spark=None) -> dict:
 
     from datafusion_ballista_python_spark.corpus import load_all
     from datafusion_ballista_python_spark.session import (
+        build_session,
         ensure_session_confs,
-        local_session,
     )
 
     owns_session = spark is None
     if owns_session:
-        spark = local_session("vacuity-audit")
+        spark = build_session(app_name="vacuity-audit")
     else:
-        spark.sparkContext.setLogLevel("ERROR")
         ensure_session_confs(spark)
 
     registry = load_all()
