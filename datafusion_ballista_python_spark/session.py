@@ -144,6 +144,14 @@ DRIVER_CONFS = {
     # stall tens of seconds on first-touch page backing (measured: 32g
     # heap -> intermittent 20-60s JVM freezes; 8g -> stable)
     "spark.driver.memory": "8g",
+    # Spark sizes Tungsten pages from the heap (execution memory / cores /
+    # 16, capped at 64m): 64m at 8g on 4 cores, and every task that sorts
+    # or aggregates allocates and zeroes at least one page however small
+    # its input.  4m is what a 1g driver on 4 cores gets and still allows
+    # 32g of pages per task (8192-entry page table).  perfbench
+    # llm_operators, 4 cores: throughput_qpm median 25.2 with 64m pages,
+    # 28.0 with 4m, 30.5 at the old 1g heap.
+    "spark.buffer.pageSize": "4m",
     # a long-lived JVM (the 70-query bench, the 1400-test suite) emits
     # codegen classes far past the JDK 17 default 240m code-cache reserve
     # (r9: 0.907x on the 70-query bench A/B)
