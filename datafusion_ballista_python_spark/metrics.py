@@ -25,7 +25,11 @@ Prometheus metrics map the reference's names onto Spark equivalents:
   Catalyst parses/analyzes/optimizes/plans before any task runs;
 - ``failed`` / ``job_failed_total`` / ``job_cancelled_total`` /
   ``job_completed_total`` / ``job_submitted_total`` — job counters;
-- ``pending_task_queue_size`` — tasks not yet started in active stages.
+- ``pending_task_queue_size`` — tasks not yet started in active stages;
+- ``codegen_compilations_total`` — codegen classes the driver JVM has
+  compiled (Spark's ``CodegenMetrics``); it rises on a codegen-cache
+  miss, so a repeated query shape that still adds to it is being
+  recompiled.
 
 Scale: the status store is driver-local and O(retained jobs)
 (``spark.ui.retainedJobs``); the endpoint reads a bounded snapshot per
@@ -44,6 +48,15 @@ from pyspark.sql import SparkSession
 
 _EXEC_BUCKETS = [0.5, 1.0, 2.5, 5.0, 10.0, 30.0, 60.0, 120.0, 300.0, 600.0]
 _PLAN_BUCKETS = [1.0, 5.0, 10.0, 25.0, 50.0, 100.0, 250.0, 500.0, 1000.0, 5000.0]
+
+
+def codegen_compilations(spark: SparkSession) -> int:
+    """Codegen classes the driver JVM has compiled so far (a cache miss
+    compiles; a cached plan shape does not)."""
+    return (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount()
+    )
 
 
 def _scala_seq(seq) -> list:
@@ -210,6 +223,11 @@ class SchedulerApi:
         )
         lines += self._counter(
             "job_submitted_total", "Counter of submitted jobs", len(jobs)
+        )
+        lines += self._counter(
+            "codegen_compilations_total",
+            "Counter of codegen classes compiled by the driver JVM",
+            codegen_compilations(self.spark),
         )
         lines += [
             "# HELP pending_task_queue_size Number of pending tasks",

@@ -14,8 +14,10 @@ the scale-oriented defaults we want on every session:
 ``build_session`` is the one way anything in this repo builds a session:
 ``BallistaContext()``, the CLI, ``Scheduler.session()``, the bench, the
 tests and ``tools/``.  It applies ``DRIVER_CONFS`` to every session, defaults
-the master to ``local[local_cpus()]`` and sets the log level to ERROR, so
-what the bench and the tests measure is what a user runs.
+the master to ``local[local_cpus()]``, sets the log level to ERROR and sizes
+the JVM's codegen class cache from the session's conf (2000 entries, so a
+session compiles each plan shape once instead of once per query), so what
+the bench and the tests measure is what a user runs.
 ``ensure_session_confs(spark)`` is idempotent and safe to call on a session we
 did not create (the correctness driver passes us its own session).
 """
@@ -156,6 +158,12 @@ DRIVER_CONFS = {
     # codegen classes far past the JDK 17 default 240m code-cache reserve
     # (r9: 0.907x on the 70-query bench A/B)
     "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=512m",
+    # Entries of the JVM-wide cache of compiled codegen classes (default
+    # 100).  One perfbench llm_operators pass needs ~370 and one round of
+    # the 70 bench.HEADLINE queries ~1,409, so at 100 every op recompiles
+    # every class, every pass; 2000 holds either workload.  Takes effect
+    # only through build_session's cache init (_init_codegen_cache).
+    "spark.sql.codegen.cache.maxEntries": "2000",
 }
 
 
@@ -182,7 +190,8 @@ def build_session(
     ``shuffle_partitions`` / ``batch_size`` defaults mirror the reference
     context (``src/context.rs:42``: 16 / 8192).  ``master`` defaults to
     ``local[local_cpus()]``; ``DRIVER_CONFS`` apply to every session, with
-    ``extra_conf`` applied last.  The log level is ERROR.
+    ``extra_conf`` applied last.  The log level is ERROR, and the codegen
+    class cache takes its size from this session (``_init_codegen_cache``).
     """
     builder = (
         SparkSession.builder.appName(app_name)
@@ -200,4 +209,25 @@ def build_session(
             builder = builder.config(mapped, str(v))
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    _init_codegen_cache(spark)
     return ensure_session_confs(spark)
+
+
+def _init_codegen_cache(spark: SparkSession) -> None:
+    """Size the JVM's codegen class cache from this session's conf.
+
+    ``CodeGenerator``'s cache reads ``spark.sql.codegen.cache.maxEntries``
+    once, through ``SQLConf.get``, when the ``CodeGenerator$`` module
+    initialises: on whichever JVM thread compiles first.  A py4j thread
+    with no active session (a thread pool's worker, a Flight SQL server
+    thread) that compiles outside a SQL execution, e.g. planning
+    ``df.rdd``, reads the fallback conf, so the cache gets 100 entries
+    whatever the session says.  Initialising it here, on the builder's
+    thread with the session active, makes the session's value the one
+    that counts.  Loading the ``CodeGenerator`` class alone does not
+    initialise the module; reading one of its values does.  Once per JVM:
+    later sessions share the cache."""
+    jvm = spark._jvm
+    jvm.org.apache.spark.sql.SparkSession.setActiveSession(spark._jsparkSession)
+    jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator \
+        .MAX_JVM_METHOD_PARAMS_LENGTH()

@@ -31,20 +31,40 @@ def test_python_workers_import_package_from_foreign_cwd(tmp_path, sf_dir):
     # udaf_geomean runs its accumulator in Python workers, which see the
     # driver's cwd and PYTHONPATH but not its sys.path edits.  The session
     # is the product default, BallistaContext() with no arguments, so the
-    # same driver shows what a user gets: the bench's core rule and confs.
+    # same driver shows what a user gets: the bench's core rule and confs,
+    # and a codegen cache sized from the session even when the first
+    # compile happens on another thread.
     probe = tmp_path / "probe.py"
     probe.write_text(textwrap.dedent(f"""
-        import json, sys
+        import json, sys, threading
         sys.path.insert(0, {_REPO!r})
         from datafusion_ballista_python_spark import BallistaContext
         from datafusion_ballista_python_spark.cluster import Executor, Scheduler
         from datafusion_ballista_python_spark.corpus import load_all
+        from datafusion_ballista_python_spark.metrics import codegen_compilations
         from datafusion_ballista_python_spark.session import DRIVER_CONFS
         from tests.oracle_harness import compare, duckdb_con
 
         spark = BallistaContext().spark
         sc = spark.sparkContext
         jvm = spark._jvm.java.lang
+        cache_max = spark._jvm.org.apache.spark.sql.internal.SQLConf.get() \
+            .codegenCacheMaxEntries()
+        # the JVM's first codegen, on a thread with no active session and
+        # outside a SQL execution (planning df.rdd), then more distinct
+        # plans than Spark's default 100-entry cache holds (the literal is
+        # inlined into the generated source); the first plan must still be
+        # cached
+        first = lambda: spark.range(3).selectExpr("id * 7 + 1").rdd.collect()
+        t = threading.Thread(target=first)
+        t.start()
+        t.join()
+        first_compiled = codegen_compilations(spark)
+        for i in range(120):
+            spark.range(3).selectExpr(f"id * {{1000 + i}} + 1").collect()
+        before = codegen_compilations(spark)
+        first()
+        recompiled = codegen_compilations(spark) - before
         spec = load_all()["udaf_geomean"]
         con = duckdb_con({sf_dir!r})
         ok, msg = compare(spec.fn(spark, {sf_dir!r}), con.sql(spec.oracle).df())
@@ -56,6 +76,8 @@ def test_python_workers_import_package_from_foreign_cwd(tmp_path, sf_dir):
             "jvm_args": list(jvm.management.ManagementFactory.getRuntimeMXBean()
                              .getInputArguments()),
             "max_memory": jvm.Runtime.getRuntime().maxMemory(),
+            "cache_max": cache_max, "first_compiled": first_compiled,
+            "recompiled": recompiled,
         }}
         spark.stop()
         print(json.dumps(out))
@@ -70,6 +92,9 @@ def test_python_workers_import_package_from_foreign_cwd(tmp_path, sf_dir):
     assert out["missing_confs"] == []
     assert "-XX:ReservedCodeCacheSize=512m" in out["jvm_args"]
     assert out["max_memory"] > 4 << 30
+    assert out["cache_max"] == 2000
+    assert out["first_compiled"] >= 1
+    assert out["recompiled"] == 0
 
 
 def test_profile_stages_report(tmp_path, sf_dir):
@@ -79,6 +104,7 @@ def test_profile_stages_report(tmp_path, sf_dir):
     assert proc.returncode == 0, proc.stderr[-3000:]
     q = json.loads(report.read_text())["queries"]["fn_math"]
     assert q["wall_sec"] > 0 and q["build_sec"] >= 0
+    assert q["codegen_compiles"] >= 0
     assert len(q["jobs"]) >= 1
     assert all(j["wall_ms"] is not None and j["wall_ms"] >= 0 for j in q["jobs"])
     assert q["stages"]

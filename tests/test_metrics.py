@@ -35,6 +35,15 @@ def _get(srv, path: str):
             return r.status, r.read().decode(), r.headers.get("Content-Type", "")
 
 
+def _codegen_compilations(srv) -> int:
+    body = _get(srv, "/api/metrics")[1]
+    return next(
+        int(l.rsplit(" ", 1)[1])
+        for l in body.splitlines()
+        if l.startswith("codegen_compilations_total ")
+    )
+
+
 def test_api_jobs_lists_submitted_jobs(api_server):
     status, body, ctype = _get(api_server, "/api/jobs")
     assert status == 200 and ctype.startswith("application/json")
@@ -72,10 +81,11 @@ def test_api_job_dot_is_real_graphviz(api_server):
     assert "Stage" in dot  # Spark's DAG-viz stage clusters
 
 
-def test_api_metrics_prometheus_set(api_server):
+def test_api_metrics_prometheus_set(api_server, spark):
     status, body, ctype = _get(api_server, "/api/metrics")
     assert status == 200 and ctype.startswith("text/plain")
-    # the reference's full metric set (metrics.md:27-35)
+    # the reference's full metric set (metrics.md:27-35), plus the codegen
+    # compile counter
     for name in (
         "job_exec_time_seconds",
         "planning_time_ms",
@@ -85,6 +95,7 @@ def test_api_metrics_prometheus_set(api_server):
         "job_completed_total",
         "job_submitted_total",
         "pending_task_queue_size",
+        "codegen_compilations_total",
     ):
         assert f"\n{name}" in body or body.startswith(name), name
     # histograms well-formed: buckets monotone, count == +Inf bucket
@@ -107,6 +118,16 @@ def test_api_metrics_prometheus_set(api_server):
         if l.startswith("planning_time_ms_count")
     )
     assert plan_count >= 1  # at least one SQL execution planned
+    # a query shape run twice is compiled once: the second run hits the
+    # codegen cache and leaves the counter where the first left it
+    def run():
+        spark.range(1000).selectExpr("id % 7919 AS k").groupBy("k").count().collect()
+
+    run()
+    compiled = _codegen_compilations(api_server)
+    assert compiled >= 1
+    run()
+    assert _codegen_compilations(api_server) == compiled
 
 
 def test_api_cancel_counts(api_server, spark):

@@ -12,6 +12,8 @@ job the entry starts, its build's jobs included, carries the job
 description ``profile:<query>``.  Per query the report (``--out``) holds:
 
 - ``build_sec`` and ``wall_sec``: the DataFrame build, and the noop-sink run;
+- ``codegen_compiles``: codegen classes compiled during the build and the
+  run (Spark's ``CodegenMetrics``; 0 when every plan shape was cached);
 - ``jobs``: each job's id, stage ids and ``wall_ms`` (JobStart to JobEnd);
 - ``stages``: per stage wall, task count, executor run time, shuffle
   read/write bytes+records, spill, and the max/median task skew ratio of
@@ -168,6 +170,7 @@ def main() -> None:
 
     import bench
     from datafusion_ballista_python_spark.corpus import load_all
+    from datafusion_ballista_python_spark.metrics import codegen_compilations
     from datafusion_ballista_python_spark.plans import explain_formatted
 
     registry = load_all()
@@ -187,23 +190,27 @@ def main() -> None:
         except Exception:
             pass
 
-    timed: dict[str, tuple[float, float, str]] = {}
+    timed: dict[str, tuple[float, float, int, str]] = {}
     for name in names:
         spark.catalog.clearCache()
         sc.setJobDescription(f"profile:{name}")
+        c0 = codegen_compilations(spark)
         t0 = time.perf_counter()
         df = registry[name].fn(spark, sf_dir)
         t1 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         t2 = time.perf_counter()
+        n_compiled = codegen_compilations(spark) - c0
         sc.setJobDescription(None)
-        timed[name] = (round(t1 - t0, 3), round(t2 - t1, 3), explain_formatted(df))
+        timed[name] = (
+            round(t1 - t0, 3), round(t2 - t1, 3), n_compiled, explain_formatted(df)
+        )
     spark.stop()
 
     parsed = parse_event_log(log_dir)
     report = {"sf_dir": sf_dir, "queries": {}}
     for name in names:
-        build_sec, wall_sec, plan = timed[name]
+        build_sec, wall_sec, n_compiled, plan = timed[name]
         jobs = [
             {"id": jid, "wall_ms": j.get("wall_ms"), "stage_ids": j["stage_ids"]}
             for jid, j in sorted(parsed["jobs"].items())
@@ -218,13 +225,15 @@ def main() -> None:
         report["queries"][name] = {
             "build_sec": build_sec,
             "wall_sec": wall_sec,
+            "codegen_compiles": n_compiled,
             "jobs": jobs,
             "stages": q_stages,
             "plan": plan,
         }
         print(
             f"== {name}: build {build_sec:.3f}s, wall {wall_sec:.3f}s,"
-            f" {len(jobs)} jobs, {len(q_stages)} stages"
+            f" {n_compiled} codegen compiles, {len(jobs)} jobs,"
+            f" {len(q_stages)} stages"
         )
         for j in jobs:
             print(f"   job {j['id']}: {j['wall_ms']}ms stages={j['stage_ids']}")
