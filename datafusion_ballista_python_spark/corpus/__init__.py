@@ -33,9 +33,12 @@ REGISTRY: dict[str, QuerySpec] = {}
 
 
 def query(name: str, oracle: Optional[str] = None):
-    """Register a corpus query (decorator)."""
+    """Register a corpus query (decorator).  A name registers once: a
+    second entry under it would silently shadow the first."""
 
     def deco(fn):
+        if name in REGISTRY:
+            raise ValueError(f"corpus query {name!r} is already registered")
         REGISTRY[name] = QuerySpec(name, fn, oracle)
         return fn
 

@@ -2,16 +2,18 @@
 
 SURVEY §2.13 carried a handful of operators certified only by unit /
 plan tests because their PRIMARY effect is filesystem- or process-level
-(salted shuffle topology, hive partition directories, compaction file
+(the on-disk IVF index, hive partition directories, compaction file
 counts, avro container bytes, cross-batch streaming state).  Their
-VALUE-level contracts are still SQL-expressible — a salted aggregate
-must equal the plain aggregate, a partitioned/compacted/avro round-trip
-must preserve every row, the incremental dedup store must converge to
-the batch-dedup fingerprint set — so this module certifies exactly
-those contracts with full DuckDB value-hash oracles.  What stays
+VALUE-level contracts are still SQL-expressible — a partitioned /
+compacted / avro round-trip must preserve every row, the on-disk index
+must answer like the in-memory one, the incremental dedup store must
+converge to the batch-dedup fingerprint set — so this module certifies
+exactly those contracts with full DuckDB value-hash oracles.  What stays
 outside the oracle (file counts, directory layout, exchange-freeness,
 replay idempotence) remains pinned by the dedicated pytest suites;
-SURVEY §2.13 notes the split per row.
+SURVEY §2.13 notes the split per row.  The salted skew operators'
+entries (``skew_salted_agg`` / ``skew_salted_join``) live in
+``pipelines.py``.
 
 Entries that write use a fresh ``tempfile.mkdtemp`` per invocation —
 results never depend on prior runs.
@@ -23,7 +25,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from ..operators import similarity, skew
+from ..operators import similarity
 from ..sources import avro as avro_src
 from ..sources import layout
 from ..sources import read_avro
@@ -31,91 +33,6 @@ from .. import streaming
 from . import query
 from .llm import _IVF_CENTROIDS, _IVF_N_PROBE, _IVF_ORACLE
 from .util import load
-
-
-# ---------------------------------------------------------------------------
-# skew-safe two-phase operators == their plain single-phase SQL
-# ---------------------------------------------------------------------------
-
-@query(
-    "skew_salted_agg",
-    oracle="""
-    SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(25,6))) AS DOUBLE) AS sum_qty,
-           CAST(COUNT(l_orderkey) AS BIGINT) AS n_rows,
-           MAX(l_extendedprice) AS max_price
-    FROM lineitem
-    GROUP BY l_returnflag, l_linestatus
-    ORDER BY l_returnflag, l_linestatus
-    """,
-)
-def skew_salted_agg(spark, sf_dir):
-    """Salted two-phase aggregation (operators/skew.salted_agg) certified
-    against the plain one-phase GROUP BY: phase 1 aggregates
-    (group, salt) subgroups, phase 2 merges (sum<-sum, count<-sum,
-    max<-max) — algebraic mergeability means the salt MUST be invisible
-    in the values.  The double sum goes through DECIMAL(25,6) so the
-    two-phase result is exact and order-independent (a float sum would
-    differ in final ulps between salt topologies, not just engines).
-    The skew property itself (hot-key task splitting) is pinned by
-    tests/test_operators.py."""
-    li = load(spark, sf_dir, "lineitem")["lineitem"]
-    out = skew.salted_agg(
-        li,
-        ["l_returnflag", "l_linestatus"],
-        {
-            "sum_qty": (F.col("l_quantity").cast("decimal(25,6)"), "sum"),
-            "n_rows": (F.col("l_orderkey"), "count"),
-            "max_price": (F.col("l_extendedprice"), "max"),
-        },
-        n_salts=16,
-    )
-    return out.select(
-        "l_returnflag",
-        "l_linestatus",
-        F.col("sum_qty").cast("double").alias("sum_qty"),
-        F.col("n_rows").cast("long").alias("n_rows"),
-        "max_price",
-    ).orderBy("l_returnflag", "l_linestatus")
-
-
-@query(
-    "skew_salted_join",
-    oracle="""
-    SELECT c_mktsegment,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE)
-               AS total_price
-    FROM orders JOIN customer ON o_custkey = c_custkey
-    GROUP BY c_mktsegment
-    ORDER BY c_mktsegment
-    """,
-)
-def skew_salted_join(spark, sf_dir):
-    """Salted equi-join (operators/skew.salted_join; probe keys salted
-    N-way, build side replicated N-fold) certified against the plain
-    join: the salt spreads a hot probe key over n_salts tasks but must
-    emit exactly the plain join's rows.  Aggregating post-join keeps the
-    certified frame small while every joined row contributes to the
-    DECIMAL-exact sum."""
-    t = load(spark, sf_dir, "orders", "customer")
-    probe = t["orders"].select(
-        F.col("o_custkey").alias("custkey"), "o_totalprice"
-    )
-    build = t["customer"].select(
-        F.col("c_custkey").alias("custkey"), "c_mktsegment"
-    )
-    joined = skew.salted_join(probe, build, ["custkey"], n_salts=8, how="inner")
-    return (
-        joined.groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(25,6)"))
-            .cast("double")
-            .alias("total_price"),
-        )
-        .orderBy("c_mktsegment")
-    )
 
 
 # ---------------------------------------------------------------------------

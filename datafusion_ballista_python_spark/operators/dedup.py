@@ -438,69 +438,27 @@ def _ordered_grams(base: DataFrame, id_col: str, order: str) -> DataFrame:
     the ordering must never change either join's result set, which both
     property tests pin).  ``"lex"`` is free; ``"frequency"`` (AllPairs
     document-frequency ascending, ties lexicographic) costs one token-count
-    aggregate + one re-sort join and buys hot-shingle skew immunity.
+    window and buys hot-shingle prefix immunity.
 
-    The document-frequency attach has two result-identical formulations,
-    selected by ``SPARK_GRAFT_DF_ATTACH`` (window count == group count, so
-    ordering, candidates and results are bit-identical — verified by
-    the four-variant A/B in OPTIMIZATION_r12.md §1 and the oracle replay):
-
-    - ``"window"`` (default): ``COUNT() OVER (PARTITION BY __tok)`` — one
-      full occurrence exchange, no second pass; measured fastest at bench
-      scale (1.30 vs 1.74 s on the sf0.1 jaccard entry).  Skew-EXPOSED: a
-      corpus-wide boilerplate shingle routes its entire posting list
-      through one reducer, and AQE can split neither a window nor an
-      aggregation partition (guide §2.5 — skew handling covers joins
-      only).
-    - ``"join"``: two-phase — ``groupBy(__tok).count()`` (map-side partial
-      aggregation caps the hot token's reducer input at one row per map
-      task) joined back onto the occurrences with a DETERMINISTIC
-      hot-key split-and-replicate: the occurrence side is salted by
-      ``pmod(xxhash64(id), 16)`` and the tiny dfreq side replicated 16
-      ways, so a hot token's posting list spreads over 16 reducers by
-      construction.  (AQE skew-join splitting was verified to NOT fire
-      on the unsalted attach join — the dfreq side's final aggregate
-      sits between the join and its shuffle stage, so OptimizeSkewedJoin's
-      SMJ(Sort(ShuffleRead), Sort(ShuffleRead)) pattern never matches;
-      the salt is the guide-§2.5 mitigation that needs no runtime rule.)
-      ``base`` is lazily checkpointed so the aggregate and probe branches
-      read one materialization instead of re-tokenizing (same volume
-      class as the ``sh`` checkpoint the callers already pin).  The
-      production setting for any corpus with boilerplate shingles;
-      tools/skew_straggler_check.py records the task-metric evidence
-      (one token in 30% of docs: window max/median straggler vs join
-      flat).
+    The document frequency is attached with one window,
+    ``COUNT() OVER (PARTITION BY __tok)``: one full occurrence exchange,
+    no second pass over the grams.  Accepted exposure: a corpus-wide
+    boilerplate shingle routes its whole posting list through one
+    reducer, and AQE can split neither a window nor an aggregate (its
+    skew handling covers joins only), the same trade ``text.tfidf``, the
+    bigram LM and ``repeated_spans`` accept.  The measured alternative,
+    a two-phase count attached by a salted join, is in
+    OPTIMIZATION_r12.md §1: on one 3-gram in 30% of 40k docs it cut the
+    worst max/median shuffle-read from 5.16 to 1.89, and it ran 25–35%
+    slower at bench scale.
     """
     if order == "frequency":
-        import os
+        from pyspark.sql import Window
 
-        if os.environ.get("SPARK_GRAFT_DF_ATTACH", "window") == "join":
-            n_salts = 16
-            base = base.localCheckpoint(eager=False)
-            tok = base.select(
-                F.col(id_col),
-                F.explode("grams").alias("__tok"),
-            ).withColumn(
-                # deterministic (retry-safe) salt — never rand() (SPARK-38388)
-                "__salt",
-                F.pmod(F.xxhash64(id_col), F.lit(n_salts)).cast("int"),
-            )
-            dfreq = (
-                tok.groupBy("__tok")
-                .agg(F.count(F.lit(1)).alias("__df"))
-                .withColumn(
-                    "__salt",
-                    F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))),
-                )
-            )
-            tokf = tok.join(dfreq, ["__tok", "__salt"])
-        else:
-            from pyspark.sql import Window
-
-            tok = base.select(F.col(id_col), F.explode("grams").alias("__tok"))
-            tokf = tok.withColumn(
-                "__df", F.count(F.lit(1)).over(Window.partitionBy("__tok"))
-            )
+        tok = base.select(F.col(id_col), F.explode("grams").alias("__tok"))
+        tokf = tok.withColumn(
+            "__df", F.count(F.lit(1)).over(Window.partitionBy("__tok"))
+        )
         return tokf.groupBy(id_col).agg(
             F.transform(
                 F.sort_array(F.collect_list(F.struct("__df", "__tok"))),

@@ -292,9 +292,9 @@ def tfidf_top_terms(
     pattern-matches SMJ(Sort(ShuffleRead), Sort(ShuffleRead)) only —
     verified in the r12 skew work, dedup._ordered_grams).  A corpus
     with boilerplate-dominated term distributions should pre-filter
-    stopwords upstream; the dedup operators' salted df-attach
-    (SPARK_GRAFT_DF_ATTACH=join) is the template if this site ever
-    needs the same hardening.
+    stopwords upstream; OPTIMIZATION_r12.md §1 records the measured
+    salted df attach (two-phase count, salted join) if this site ever
+    needs that hardening.
     """
     terms = _terms(df, text_col, id_col)
     tf = terms.groupBy(id_col, "term").agg(F.count(F.lit(1)).cast("long").alias("tf"))

@@ -42,6 +42,18 @@ def test_fingerprint_covers_oracle_and_source():
     assert base != entry_fingerprint(QuerySpec("x", fn_b, "SELECT 1"))
 
 
+def test_corpus_names_register_once(monkeypatch):
+    """A duplicate ``@query`` name raises instead of shadowing the entry
+    registered before it, and the shipped corpus has no duplicates."""
+    from datafusion_ballista_python_spark import corpus
+
+    assert len(load_all()) == 237
+    monkeypatch.setattr(corpus, "REGISTRY", {})
+    corpus.query("x")(lambda spark, sf_dir: None)
+    with pytest.raises(ValueError, match="'x' is already registered"):
+        corpus.query("x")(lambda spark, sf_dir: None)
+
+
 def test_ledger_tool_inline_hash_matches_library():
     """update_oracle_ledger's --rev mode inlines the hash (to fingerprint
     revisions predating corpus.entry_fingerprint) — the inlined formula

@@ -3,16 +3,19 @@
 Every session of ``BallistaContext``, the CLI, ``Scheduler``, the bench,
 the tests and ``tools/`` is built by ``session.py``, so none of them can
 drift from the driver confs the bench measures with (the code-cache flag
-above all), its core count or its log level.  ``BallistaContext.set_conf``
-still overrides a session conf afterwards.  The event-log parser these
-sessions feed (``tools.profile_stages.parse_event_log``) is pinned here on
-a synthetic log, Spark-free.
+above all), its core count or its log level.  No other package module
+reads a ``SPARK_GRAFT_*`` variable, so there are no env modes.
+``BallistaContext.set_conf`` still overrides a session conf afterwards.
+The event-log parser these sessions feed
+(``tools.profile_stages.parse_event_log``) is pinned here on a synthetic
+log, Spark-free.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import subprocess
 
 from datafusion_ballista_python_spark.session import DRIVER_CONFS
@@ -50,6 +53,25 @@ def test_session_builder_only_in_session_module():
                 found[needle].append(rel)
     assert found[builder] == [session]
     assert {rel for files in found.values() for rel in files} == {session}, found
+
+
+def test_no_env_modes_outside_session_module():
+    # the package's one environment knob is the core count, read by
+    # session.local_cpus; an operator that branches on a SPARK_GRAFT_*
+    # variable is a mode the bench and the oracles never see
+    read = re.compile(r"(?:environ|getenv)\b[^\n]*[\"']SPARK_GRAFT_")
+    tracked = subprocess.run(
+        ["git", "ls-files", "datafusion_ballista_python_spark/*.py"],
+        cwd=_REPO, capture_output=True, text=True, check=True,
+    ).stdout.split()
+    session = "datafusion_ballista_python_spark/session.py"
+    assert session in tracked
+    readers = []
+    for rel in tracked:
+        with open(os.path.join(_REPO, rel), errors="replace") as fh:
+            if read.search(fh.read()):
+                readers.append(rel)
+    assert readers == [session]
 
 
 def test_suite_session_carries_local_driver_confs(spark):

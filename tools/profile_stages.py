@@ -140,7 +140,7 @@ def parse_event_log(log_dir: str) -> dict:
     return {"stages": stages, "jobs": jobs}
 
 
-def build_profiling_session(app: str, log_dir: str, extra: dict | None = None):
+def build_profiling_session(app: str, log_dir: str):
     """The bench's local session, writing an uncompressed event log to
     ``log_dir`` (``parse_event_log`` reads the plain JSON stream)."""
     from datafusion_ballista_python_spark.session import build_session
@@ -151,7 +151,6 @@ def build_profiling_session(app: str, log_dir: str, extra: dict | None = None):
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": f"file://{log_dir}",
             "spark.eventLog.compress": "false",
-            **(extra or {}),
         },
     )
 
