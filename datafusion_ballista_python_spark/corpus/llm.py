@@ -2622,12 +2622,10 @@ def text_perplexity_buckets(spark, sf_dir):
     """CCNet-style head/middle/tail split (operators/text.
     perplexity_buckets, public method: Wenzek et al. 2020): per-language
     NTILE(3) over the corpus-trained unigram bits-per-token — the
-    standard pretraining quality strata.  Exact mode certified here
-    (deterministic tie-break on doc id); the approx mode (percentile
-    cutoffs, no per-language sort) is the 100 TB path and is asserted
-    equal on this data by tests/test_operators.py.  The perplexity CTE
-    chain is shared verbatim with text_unigram_perplexity, so the two
-    entries can never diverge on tokenization."""
+    standard pretraining quality strata, with a deterministic tie-break
+    on doc id so the SQL replay matches bucket for bucket.  The
+    perplexity CTE chain is shared verbatim with text_unigram_perplexity,
+    so the two entries can never diverge on tokenization."""
     docs = load(spark, sf_dir, "documents")["documents"]
     return text.perplexity_buckets(docs, n_buckets=3).orderBy("doc_id")
 

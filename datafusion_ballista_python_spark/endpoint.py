@@ -29,7 +29,6 @@ def start_sql_endpoint(
     spark: SparkSession,
     port: int = 10000,
     wait_secs: float = 30.0,
-    single_session: bool = True,
 ) -> int:
     """Start a Thrift JDBC/ODBC endpoint serving this session's catalog.
 
@@ -37,11 +36,10 @@ def start_sql_endpoint(
     HiveThriftServer2 is a JVM singleton — a second call in one JVM
     returns the already-running endpoint's port.
 
-    ``single_session=True`` makes every JDBC connection share THIS Spark
-    session, so temp views registered via ``register_parquet`` are
-    directly queryable by clients (verified end-to-end with beeline);
-    with it off, each JDBC connection gets an isolated session and only
-    global temp views / persistent tables are shared.
+    Every JDBC connection shares THIS Spark session
+    (``spark.sql.hive.thriftServer.singleSession``), so temp views
+    registered via ``register_parquet`` are directly queryable by clients
+    (verified end-to-end with beeline).
     """
     jvm = spark._jvm
     # the thrift server reads its port from the hadoop/hive conf of the
@@ -50,15 +48,14 @@ def start_sql_endpoint(
     spark.sparkContext._jsc.hadoopConfiguration().set(
         "hive.server2.thrift.port", str(port)
     )
-    if single_session:
-        try:
-            spark.conf.set("spark.sql.hive.thriftServer.singleSession", "true")
-        except Exception:
-            # static conf: settable only at session build (build_session
-            # does).  On a pre-existing session without it, JDBC clients
-            # get isolated sessions and see global temp views / persistent
-            # tables only.
-            pass
+    try:
+        spark.conf.set("spark.sql.hive.thriftServer.singleSession", "true")
+    except Exception:
+        # static conf: settable only at session build (build_session
+        # does).  On a pre-existing session without it, JDBC clients get
+        # isolated sessions and see global temp views / persistent tables
+        # only.
+        pass
     try:
         jsql = spark._jsparkSession.sqlContext()
         jvm.org.apache.spark.sql.hive.thriftserver.HiveThriftServer2.startWithContext(

@@ -248,7 +248,6 @@ def _minhash_wide(
     shingle_n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_partitions: Optional[int] = None,
 ) -> DataFrame:
     """One row per document with ``__mh0..__mh{n-1}`` signature columns.
 
@@ -270,12 +269,9 @@ def _minhash_wide(
     CAST(CONCAT('0x', SUBSTRING(MD5(g),1,15)) AS BIGINT), which keeps the
     whole pipeline oracle-checkable.
     """
-    spark = df.sparkSession
-    if num_partitions is None:
-        target = spark.sparkContext.defaultParallelism
-        num_partitions = target if df.rdd.getNumPartitions() < target else None
-    if num_partitions:
-        df = df.repartition(num_partitions)
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        df = df.repartition(target)
 
     exploded = with_shingles(df, text_col, shingle_n, "__grams").select(
         F.col(id_col), F.explode(F.col("__grams")).alias("g")
@@ -300,11 +296,10 @@ def minhash_signatures(
     shingle_n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_partitions: Optional[int] = None,
 ) -> DataFrame:
     """Long-form (doc, seed, mh) minhash signatures — a map-only posexplode
     of the wide per-document row (see :func:`_minhash_wide`)."""
-    wide = _minhash_wide(df, num_hashes, shingle_n, text_col, id_col, num_partitions)
+    wide = _minhash_wide(df, num_hashes, shingle_n, text_col, id_col)
     return wide.select(
         F.col(id_col),
         F.posexplode(F.array(*[F.col(f"__mh{i}") for i in range(num_hashes)])).alias(
@@ -478,13 +473,12 @@ def jaccard_candidates(
     sh: DataFrame,
     threshold: float,
     id_col: str = "doc_id",
-    positional: bool = True,
 ) -> DataFrame:
     """Candidate (doc_a, doc_b) pairs for :func:`jaccard_join` from an
     ordered-grams frame ``sh`` (``(id_col, grams)``, grams sorted under
     one global total order): prefix explode, ONE equi-join on the shingle
-    key with the AllPairs length filter and (optionally) the PPJoin
-    positional filter applied INSIDE the join, then distinct.
+    key with the AllPairs length filter and the PPJoin positional filter
+    applied INSIDE the join, then distinct.
 
     Shared by the operator and the deterministic candidate-count tests,
     so the pruning facts pinned by the tests are facts about the SHIPPED
@@ -533,19 +527,18 @@ def jaccard_candidates(
         F.col("__pos").alias("__pb"),
         "__tok",
     )
+    ub = F.least(
+        F.col("__na") - F.col("__pa"), F.col("__nb") - F.col("__pb")
+    ).cast("double")
+    alpha = F.lit(threshold / (1.0 + threshold)) * (
+        F.col("__na") + F.col("__nb")
+    ).cast("double")
     cond = (
         (pa["__tok"] == pb["__tok"])
         & (F.col("__nb").cast("double") >= F.lit(threshold) * F.col("__na"))
         & (F.col("__na").cast("double") >= F.lit(threshold) * F.col("__nb"))
+        & (ub >= alpha - F.lit(1e-6))
     )
-    if positional:
-        ub = F.least(
-            F.col("__na") - F.col("__pa"), F.col("__nb") - F.col("__pb")
-        ).cast("double")
-        alpha = F.lit(threshold / (1.0 + threshold)) * (
-            F.col("__na") + F.col("__nb")
-        ).cast("double")
-        cond = cond & (ub >= alpha - F.lit(1e-6))
     return (
         pa.join(pb, cond)
         .where(F.col("doc_a") < F.col("doc_b"))
@@ -624,7 +617,6 @@ def jaccard_join(
     id_col: str = "doc_id",
     round_digits: int = 6,
     order: str = "lex",
-    positional: bool = True,
 ) -> DataFrame:
     """EXACT set-similarity self-join: ALL pairs with shingle Jaccard >=
     threshold — no misses, unlike :func:`minhash_lsh_pairs` — via prefix
@@ -657,18 +649,17 @@ def jaccard_join(
       explosion under "lex") is pushed out of every prefix that has
       anything rarer.  The right setting for any real crawl corpus.
 
-    ``positional`` adds the PPJoin positional filter (Xiao et al.,
-    "Efficient Similarity Joins for Near Duplicate Detection", WWW'08)
-    on top of the prefix + length filters — result-identical pruning:
-    a qualifying pair's FIRST shared token (positions i in A, j in B,
-    1-based, same global order, no shared token before it) bounds the
-    overlap by ``1 + min(|A|-i, |B|-j)``, which must reach the Jaccard
-    overlap requirement ``t/(1+t) * (|A|+|B|)``; candidate occurrences
-    whose positions bound the overlap below that can never be a pair's
-    first shared token AND qualify, so dropping them keeps the
+    On top of the prefix + length filters sits the PPJoin positional
+    filter (Xiao et al., "Efficient Similarity Joins for Near Duplicate
+    Detection", WWW'08) — result-identical pruning: a qualifying pair's
+    FIRST shared token (positions i in A, j in B, 1-based, same global
+    order, no shared token before it) bounds the overlap by
+    ``1 + min(|A|-i, |B|-j)``, which must reach the Jaccard overlap
+    requirement ``t/(1+t) * (|A|+|B|)``; candidate occurrences whose
+    positions bound the overlap below that can never be a pair's first
+    shared token AND qualify, so dropping them keeps the
     first-shared-token occurrence of every qualifying pair (the bound is
-    relaxed by 1e-6 so double rounding can only under-prune).  Kept
-    toggleable for the result-identity property tests.
+    relaxed by 1e-6 so double rounding can only under-prune).
     """
     base = with_shingles(df, text_col, shingle_n, "grams").select(
         F.col(id_col), F.col("grams")
@@ -682,12 +673,7 @@ def jaccard_join(
     # accumulate cached frames with no release path (same reasoning as
     # triangle_count's checkpoints)
     sh = _ordered_grams(base, id_col, order).localCheckpoint(eager=False)
-    plen = (
-        F.size("grams")
-        - F.ceil(F.lit(threshold) * F.size("grams")).cast("int")
-        + F.lit(1)
-    )
-    cands = jaccard_candidates(sh, threshold, id_col=id_col, positional=positional)
+    cands = jaccard_candidates(sh, threshold, id_col=id_col)
     # hashed-overlap prefilter before the exact verify: J >= t forces
     # |A∩B| >= t/(1+t) * (|A|+|B|); candidates provably below that bound
     # (on the cheap integer-hash arrays) never reach the string
@@ -732,7 +718,6 @@ def containment_join(
     id_col: str = "doc_id",
     round_digits: int = 6,
     order: str = "lex",
-    positional: bool = True,
 ) -> DataFrame:
     """EXACT containment self-join: every DIRECTED pair (doc_a, doc_b)
     with shingle containment C(A→B) = |A∩B| / |A| >= threshold — the
@@ -770,8 +755,8 @@ def containment_join(
     for that shingle; rarest-first pushes it out of every prefix that
     has anything rarer.
 
-    ``positional`` adds the PPJoin positional filter (Xiao et al.,
-    WWW'08), adapted to the one-sided case: a qualifying pair's FIRST
+    The PPJoin positional filter (Xiao et al., WWW'08) is applied too,
+    adapted to the one-sided case: a qualifying pair's FIRST
     shared token (positions i in A's prefix, j in B's full sorted set,
     1-based, nothing shared before it) bounds the overlap by
     ``1 + min(|A|-i, |B|-j)``, which must reach the containment overlap
@@ -809,21 +794,19 @@ def containment_join(
     ).select("doc_b", "__nb", "__pb", F.xxhash64("__tok0").alias("__tok"))
     # size filter INSIDE the join: |A∩B| >= ceil(t|A|) needs |B| >= t|A|,
     # so undersized containers drop before the candidate distinct — the
-    # containment analogue of the set-similarity length filter
-    cond = (pref["__tok"] == full["__tok"]) & (
-        F.col("__nb").cast("double") >= F.lit(threshold) * F.col("__na")
+    # containment analogue of the set-similarity length filter.  Then the
+    # one-sided PPJoin positional filter: first-shared-token overlap
+    # bound min(na-pa, nb-pb) (0-based positions) must reach the
+    # containment overlap requirement t*na (1e-6 slack: double rounding
+    # can only under-prune)
+    ub = F.least(
+        F.col("__na") - F.col("__pa"), F.col("__nb") - F.col("__pb")
+    ).cast("double")
+    cond = (
+        (pref["__tok"] == full["__tok"])
+        & (F.col("__nb").cast("double") >= F.lit(threshold) * F.col("__na"))
+        & (ub >= F.lit(threshold) * F.col("__na").cast("double") - F.lit(1e-6))
     )
-    if positional:
-        # one-sided PPJoin positional filter: first-shared-token overlap
-        # bound min(na-pa, nb-pb) (0-based positions) must reach the
-        # containment overlap requirement t*na (1e-6 slack: double
-        # rounding can only under-prune)
-        ub = F.least(
-            F.col("__na") - F.col("__pa"), F.col("__nb") - F.col("__pb")
-        ).cast("double")
-        cond = cond & (
-            ub >= F.lit(threshold) * F.col("__na").cast("double") - F.lit(1e-6)
-        )
     cands = (
         pref.join(full, cond)
         .where(F.col("doc_a") != F.col("doc_b"))
@@ -1091,7 +1074,6 @@ def survivor_selection(
     id_col: str = "doc_id",
     id_a: str = "doc_a",
     id_b: str = "doc_b",
-    algorithm: str = "minlabel",
 ) -> DataFrame:
     """Policy-based survivor selection over duplicate clusters: close the
     near-dup ``pairs`` into connected components, then keep exactly one
@@ -1107,7 +1089,7 @@ def survivor_selection(
     attributes downstream.
 
     Scale shape: the transitive closure is the iterative join/agg of
-    operators/graph.py (O(diameter) or O(log d) rounds — never a driver
+    operators/graph.py (minlabel: O(diameter) rounds — never a driver
     collect); the label attach is one left join on the doc id; the
     argmax-per-cluster is a single window shuffle keyed by component.
     Near-dup components are small and singletons dominate, so the window
@@ -1118,7 +1100,7 @@ def survivor_selection(
 
     from .graph import connected_components
 
-    cc = connected_components(pairs, id_a=id_a, id_b=id_b, algorithm=algorithm)
+    cc = connected_components(pairs, id_a=id_a, id_b=id_b)
     labeled = docs.join(
         cc, docs[id_col] == cc["node"], "left"
     ).select(

@@ -449,20 +449,13 @@ def pagerank_directed(
     return pr.select("node", "pr")
 
 
-def _oriented_edges(und: DataFrame, orientation: str) -> DataFrame:
+def _oriented_edges(und: DataFrame) -> DataFrame:
     """Orient a distinct undirected edge set (u, v) from the lower-ranked
-    endpoint: rank = (degree, id) for ``"degree"`` (whale nodes become
-    sinks — bounded wedge fan-out), plain id for ``"id"``.  Returns
-    (src, dst, dk) where ``dk`` is the dst's rank key, kept so the wedge
-    join can order the two far endpoints by the SAME rank the closing
-    edge was oriented by (struct comparison is lexicographic)."""
-    if orientation == "id":
-        # canonical (u, v) already has u < v
-        return und.select(
-            F.col("u").alias("src"),
-            F.col("v").alias("dst"),
-            F.struct(F.lit(0).alias("d"), F.col("v").alias("n")).alias("dk"),
-        )
+    endpoint, rank = (degree, id): whale nodes become sinks — bounded
+    wedge fan-out.  Returns (src, dst, dk) where ``dk`` is the dst's rank
+    key, kept so the wedge join can order the two far endpoints by the
+    SAME rank the closing edge was oriented by (struct comparison is
+    lexicographic)."""
     deg = (
         und.select(F.col("u").alias("n"))
         .union(und.select(F.col("v").alias("n")))
@@ -488,7 +481,6 @@ def triangle_count(
     pairs: DataFrame,
     id_a: str = "doc_a",
     id_b: str = "doc_b",
-    orientation: str = "degree",
 ) -> DataFrame:
     """Exact per-node triangle counts over the undirected pair graph — the
     local-clustering signal that separates tight duplicate blobs (every
@@ -498,26 +490,20 @@ def triangle_count(
     Triangles and the Curse of the Last Reducer", WWW 2011): orient every
     edge from its lower-RANKED endpoint, self-join oriented edges on the
     shared source to enumerate wedges, then one join of wedges against
-    the oriented edge set confirms the closing edge.  With
-    ``orientation="degree"`` (default) the rank is (degree, id): every
-    edge points toward the HIGHER-degree endpoint, so a whale node of
-    degree d contributes out-degree ~0 (its edges all point AT it) and
-    every node's wedge fan-out is bounded by O(sqrt(m)) out-edges — the
-    paper's fix for the "curse of the last reducer".  ``"id"`` keeps the
-    plain low->high id orientation (one fewer degree join; fine when the
-    degree distribution is flat).  Triangle counts are
-    orientation-INVARIANT, so both modes return identical results — the
-    corpus oracle certifies the degree mode against an id-oriented SQL
-    replay.
+    the oriented edge set confirms the closing edge.  The rank is
+    (degree, id): every edge points toward the HIGHER-degree endpoint, so
+    a whale node of degree d contributes out-degree ~0 (its edges all
+    point AT it) and every node's wedge fan-out is bounded by O(sqrt(m))
+    out-edges — the paper's fix for the "curse of the last reducer".
+    Triangle counts are orientation-INVARIANT, so the corpus oracle
+    certifies this degree orientation against an id-oriented SQL replay.
 
-    Shuffles: degree aggregate (+2 rank joins, degree mode only) + wedge
-    join on the apex + confirm join on the closing edge + one count
-    aggregate per corner; all equi-joins, no Python.
+    Shuffles: degree aggregate + 2 rank joins + wedge join on the apex +
+    confirm join on the closing edge + one count aggregate per corner;
+    all equi-joins, no Python.
     Output: (node, n_triangles) for every node in the pair list
     (zero-triangle nodes included).
     """
-    if orientation not in ("degree", "id"):
-        raise ValueError(f"orientation must be 'degree' or 'id', got {orientation!r}")
     # LAZY localCheckpoint, not persist: the operator returns a LAZY
     # frame, so a persist+unpersist pair inside the builder would unmark
     # the cache before any action ran and the oriented-distinct edge set
@@ -537,7 +523,7 @@ def triangle_count(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    o = _oriented_edges(und, orientation).localCheckpoint(eager=False)
+    o = _oriented_edges(und).localCheckpoint(eager=False)
     # wedges: src -> (b, c), both out-edges, dst ranks ordered b < c —
     # so the closing edge b-c is oriented exactly (b -> c)
     w = (

@@ -1249,7 +1249,6 @@ def perplexity_buckets(
     id_col: str = "doc_id",
     lang_col: str = "lang",
     lm: DataFrame | None = None,
-    cutoffs: str = "exact",
 ) -> DataFrame:
     """CCNet-style per-language perplexity bucketing (Wenzek et al. 2020):
     score every document with :func:`unigram_perplexity`, then split each
@@ -1258,14 +1257,9 @@ def perplexity_buckets(
     are CCNet's head/middle/tail, the standard pretraining-quality strata
     (train on head+middle, sample tail).
 
-    ``cutoffs="exact"`` ranks with NTILE over (bits_per_token, doc id) —
-    ties are split deterministically by id, so bucket membership is
-    bit-stable and a SQL oracle replays it exactly.  ``"approx"`` is the
-    100 TB path: per-language quantile cutoffs via percentile_approx
-    (one partial-agg pass, NO per-language global sort), buckets assigned
-    by value against the broadcast cutoffs — documents tied on a cutoff
-    value share a bucket (value-deterministic, but bucket sizes are only
-    approximately equal; that is the accepted trade on real corpora).
+    Buckets are an NTILE over (bits_per_token, doc id) — ties are split
+    deterministically by id, so bucket membership is bit-stable and a SQL
+    oracle replays it exactly.
 
     Documents with zero tokens (no perplexity) are EXCLUDED — route them
     with a length gate upstream; a NULL score has no place in a quantile
@@ -1274,56 +1268,23 @@ def perplexity_buckets(
 
     Scale: the perplexity sub-plan is documented at
     :func:`unigram_perplexity` (map-side tf collapse, one term shuffle);
-    exact mode adds one window partitioned by language (a per-language
-    sort — fine to thousands of partitions per language, the reason the
-    approx mode exists); approx mode adds one percentile_approx aggregate
-    + a broadcast join.
+    the buckets add one window partitioned by language (a per-language
+    sort — fine to thousands of partitions per language).
     """
     if n_buckets < 2:
         raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-    if cutoffs not in ("exact", "approx"):
-        raise ValueError(f"cutoffs must be 'exact' or 'approx', got {cutoffs!r}")
     scored = unigram_perplexity(df, text_col=text_col, id_col=id_col, lm=lm)
     scored = scored.join(
         df.select(F.col(id_col), F.col(lang_col).alias("lang")), id_col
     ).where(F.col("bits_per_token").isNotNull())
 
-    if cutoffs == "exact":
-        w = Window.partitionBy("lang").orderBy(
-            F.asc("bits_per_token"), F.asc(id_col)
-        )
-        bucketed = scored.select(
-            id_col,
-            "lang",
-            "bits_per_token",
-            F.ntile(n_buckets).over(w).alias("bucket"),
-        )
-    else:
-        cuts = scored.groupBy("lang").agg(
-            F.percentile_approx(
-                "bits_per_token",
-                [i / n_buckets for i in range(1, n_buckets)],
-                100_000,
-            ).alias("__cuts")
-        )
-        bucketed = (
-            scored.join(F.broadcast(cuts), "lang")
-            .select(
-                id_col,
-                "lang",
-                "bits_per_token",
-                # bucket = 1 + number of cutoffs strictly below the score
-                (
-                    F.lit(1)
-                    + F.size(
-                        F.filter(
-                            F.col("__cuts"),
-                            lambda c: c < F.col("bits_per_token"),
-                        )
-                    )
-                ).cast("int").alias("bucket"),
-            )
-        )
+    w = Window.partitionBy("lang").orderBy(F.asc("bits_per_token"), F.asc(id_col))
+    bucketed = scored.select(
+        id_col,
+        "lang",
+        "bits_per_token",
+        F.ntile(n_buckets).over(w).alias("bucket"),
+    )
     tier = (
         F.when(F.col("bucket") == 1, F.lit("head"))
         .when(F.col("bucket") == 2, F.lit("middle"))

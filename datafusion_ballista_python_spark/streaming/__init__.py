@@ -294,18 +294,14 @@ def enrich_with_dimension(
     dim: DataFrame,
     on: str,
     how: str = "left",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Stream-static enrichment join: each micro-batch joins against the
-    (batch) dimension table.  The standard pipeline pattern for attaching
-    user/item attributes to an event stream.
+    (batch) dimension table, broadcast.  The standard pipeline pattern for
+    attaching user/item attributes to an event stream.
 
     Scale: a broadcast dimension means zero shuffle of the stream — each
-    executor enriches its own partitions; for dimensions too large to
-    broadcast, pass broadcast_dim=False and pre-bucket both sides on the
-    key (sources.bucketing) so the per-batch join is co-located."""
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return events.join(d, on=on, how=how)
+    executor enriches its own partitions."""
+    return events.join(F.broadcast(dim), on=on, how=how)
 
 
 def attributed_purchases(

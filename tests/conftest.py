@@ -25,6 +25,7 @@ _SMOKE_MODULES = {
     "test_knife_edge",
     "test_cluster_guards",
     "test_session_factory",
+    "test_operator_options",
 }
 
 # one oracle entry per family (relational agg, join, window, dedup-exact,

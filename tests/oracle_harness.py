@@ -170,9 +170,8 @@ def _nested_signbit_mismatch(x, y) -> bool:
 
 
 def run_all(spark, sf_dir: str, only: list[str] | None = None) -> dict[str, str]:
-    import sys
-
-    sys.path.insert(0, "/root/repo")
+    # the caller's sys.path decides which checkout's corpus runs
+    # (tools/replay_oracle.py puts its own repo root first)
     from __spark_entry__ import oracle_sql, queries
 
     qs, oracles = queries(), oracle_sql()

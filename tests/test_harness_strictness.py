@@ -8,6 +8,9 @@ tests pin the sign-bit discrimination so the blindness cannot return.
 from __future__ import annotations
 
 import math
+import os
+import subprocess
+import sys
 
 import pandas as pd
 
@@ -70,3 +73,29 @@ def test_nested_arrays_equal_bits_match(spark):
     opdf = pd.DataFrame({"v": [[0.0, -1.5]]})
     ok, msg = compare(sdf, opdf)
     assert ok, msg
+
+
+def test_run_all_imports_the_callers_entry_module(tmp_path):
+    """run_all must import whichever ``__spark_entry__`` leads the
+    caller's sys.path — a replay from another checkout certifies that
+    checkout's corpus, not a fixed path's."""
+    from .conftest import SF_DIR
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    stub = tmp_path / "stub"
+    stub.mkdir()
+    (stub / "__spark_entry__.py").write_text(
+        "def queries():\n    return {}\n\n\ndef oracle_sql():\n    return {}\n"
+    )
+    script = (
+        "import sys\n"
+        f"sys.path[:0] = [{str(stub)!r}, {repo!r}]\n"
+        "from tests.oracle_harness import run_all\n"
+        f"assert run_all(None, {SF_DIR!r}, only=[]) == {{}}\n"
+        "print(sys.modules['__spark_entry__'].__file__)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path,
+        capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    assert out == str(stub / "__spark_entry__.py")

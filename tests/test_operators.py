@@ -1854,12 +1854,11 @@ def test_benford_digits_known_distribution(spark):
 
 
 def test_triangle_count_degree_orientation_bounds_hub_fanout(spark):
-    """Skewed star graph: a hub (lowest ID — the id-orientation worst
-    case) connected to n leaves, plus leaf-leaf chords.  With (degree, id)
-    orientation every star edge must point AT the hub (its out-degree is
-    ~0), so wedge fan-out at the whale is bounded — while id-orientation
-    would give the hub C(n,2) wedges.  Counts must be identical in both
-    modes (orientation-invariant)."""
+    """Skewed star graph: a hub (lowest ID — the worst case for a plain
+    low->high id orientation) connected to n leaves, plus leaf-leaf
+    chords.  With (degree, id) orientation every star edge must point AT
+    the hub (its out-degree is ~0), so wedge fan-out at the whale is
+    bounded — while id-orientation would give the hub C(n,2) wedges."""
     from datafusion_ballista_python_spark.operators.graph import (
         _oriented_edges,
         triangle_count,
@@ -1879,31 +1878,23 @@ def test_triangle_count_degree_orientation_bounds_hub_fanout(spark):
     )
     out_deg = {
         r["src"]: r["c"]
-        for r in _oriented_edges(und, "degree")
+        for r in _oriented_edges(und)
         .groupBy("src").agg(F.count(F.lit(1)).alias("c")).collect()
     }
-    # degree mode: the whale is a SINK — zero out-edges, zero wedges
+    # the whale is a SINK — zero out-edges, zero wedges
     assert out_deg.get(hub, 0) == 0, f"hub out-degree {out_deg.get(hub)}"
     assert max(out_deg.values()) <= 2  # leaves: 1 chord + 1 star edge
-    id_out = {
-        r["src"]: r["c"]
-        for r in _oriented_edges(und, "id")
-        .groupBy("src").agg(F.count(F.lit(1)).alias("c")).collect()
-    }
-    assert id_out[hub] == n  # the id-orientation pathology being fixed
+    # low->high id orientation of the same edge list: every star edge
+    # leaves the hub — the pathology the degree rank fixes
+    id_out = {}
+    for u, v in {(min(a, b), max(a, b)) for a, b in edges + chords if a != b}:
+        id_out[u] = id_out.get(u, 0) + 1
+    assert id_out[hub] == n
 
-    got_deg = {r["node"]: r["n_triangles"]
-               for r in triangle_count(df, orientation="degree").collect()}
-    got_id = {r["node"]: r["n_triangles"]
-              for r in triangle_count(df, orientation="id").collect()}
-    assert got_deg == got_id
-    assert got_deg[hub] == 3
+    got = {r["node"]: r["n_triangles"] for r in triangle_count(df).collect()}
+    assert got[hub] == 3
     for a, b in chords:
-        assert got_deg[a] == 1 and got_deg[b] == 1
-    import pytest
-
-    with pytest.raises(ValueError, match="orientation"):
-        triangle_count(df, orientation="random")
+        assert got[a] == 1 and got[b] == 1
 
 
 def test_pq_codebooks_shape_and_determinism(emb):
@@ -2327,8 +2318,8 @@ def test_positional_filter_prunes_late_prefix_candidates(spark):
     a dead arm): docs sharing one token at the last prefix slot bound
     the overlap at min(na-pa, nb-pb) = 6 < t/(1+t)*(na+nb) = 7.33, so
     every such candidate dies in the join; exact duplicates (every
-    position shared) survive and the RESULT is identical either way."""
-    from pyspark.sql import functions as F
+    position shared) survive."""
+    import math
 
     from datafusion_ballista_python_spark.operators import dedup
     from datafusion_ballista_python_spark.operators.dedup import (
@@ -2351,28 +2342,35 @@ def test_positional_filter_prunes_late_prefix_candidates(spark):
     rows += [(100, "dup1 dup2 dup3 dup4 dup5"), (101, "dup1 dup2 dup3 dup4 dup5")]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
 
-    def n_candidates(positional):
-        # counts come from the SHIPPED candidate pipeline (the same
-        # jaccard_candidates call jaccard_join makes), so this pins the
-        # operator's pruning, not a white-box replica of it
-        base = with_shingles(df, "text", 1, "grams").select("doc_id", "grams")
-        sh = _ordered_grams(base, "doc_id", "lex")
-        return dedup.jaccard_candidates(
-            sh, t, id_col="doc_id", positional=positional
-        ).count()
+    # prefix + length filters alone, in plain Python over the same rows:
+    # pairs sharing a token in both lex-sorted prefixes, sizes within t
+    grams = {i: sorted(set(text.split())) for i, text in rows}
+    prefix = {
+        i: set(g[: len(g) - math.ceil(t * len(g)) + 1]) for i, g in grams.items()
+    }
+    n_prefix = sum(
+        1
+        for a in grams
+        for b in grams
+        if a < b
+        and prefix[a] & prefix[b]
+        and t * len(grams[a]) <= len(grams[b])
+        and t * len(grams[b]) <= len(grams[a])
+    )
+    assert n_prefix == 190 + 1, n_prefix  # all 'mm' pairs + the dup pair
 
-    n_off, n_on = n_candidates(False), n_candidates(True)
-    assert n_off == 190 + 1, n_off  # all 'mm' pairs + the dup pair
-    assert n_on == 1, n_on          # positional kills every 'mm'-only pair
-    # and the filter never changes the RESULT
-    for positional in (True, False):
-        got = {
-            (r["doc_a"], r["doc_b"]): r["jaccard"]
-            for r in dedup.jaccard_join(
-                df, t, shingle_n=1, positional=positional
-            ).collect()
-        }
-        assert got == {(100, 101): 1.0}, (positional, got)
+    # the SHIPPED candidate pipeline (the same jaccard_candidates call
+    # jaccard_join makes), so this pins the operator's pruning, not a
+    # white-box replica of it
+    base = with_shingles(df, "text", 1, "grams").select("doc_id", "grams")
+    sh = _ordered_grams(base, "doc_id", "lex")
+    n_on = dedup.jaccard_candidates(sh, t, id_col="doc_id").count()
+    assert n_on == 1, n_on  # positional kills every 'mm'-only pair
+    got = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in dedup.jaccard_join(df, t, shingle_n=1).collect()
+    }
+    assert got == {(100, 101): 1.0}, got
 
 
 def test_overlap_prefilter_is_exact_superset(spark):

@@ -627,9 +627,8 @@ def test_lsh_recall_truth_matches_bruteforce(spark, docs):
     ),
     threshold=st.sampled_from([0.3, 0.5, 0.8]),
     order=st.sampled_from(["lex", "frequency"]),
-    positional=st.booleans(),
 )
-def test_jaccard_join_matches_bruteforce(spark, docs, threshold, order, positional):
+def test_jaccard_join_matches_bruteforce(spark, docs, threshold, order):
     """Prefix-filtered exact join == brute-force all-pairs shingle Jaccard
     on arbitrary tiny corpora and thresholds — guards the prefix-length
     arithmetic (|g| - ceil(t|g|) + 1) and the candidate-superset lemma
@@ -660,7 +659,7 @@ def test_jaccard_join_matches_bruteforce(spark, docs, threshold, order, position
     got = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
         for r in jaccard_join(df, threshold=threshold, shingle_n=n,
-                              order=order, positional=positional).collect()
+                              order=order).collect()
     }
     assert got == want
 
@@ -676,9 +675,8 @@ def test_jaccard_join_matches_bruteforce(spark, docs, threshold, order, position
     ),
     threshold=st.sampled_from([0.5, 0.8, 0.9]),
     order=st.sampled_from(["lex", "frequency"]),
-    positional=st.booleans(),
 )
-def test_containment_join_matches_bruteforce(spark, docs, threshold, order, positional):
+def test_containment_join_matches_bruteforce(spark, docs, threshold, order):
     """One-sided prefix-filtered containment join == brute-force directed
     all-pairs |A∩B|/|A| on arbitrary tiny corpora — COMPLETENESS guards
     the asymmetric prefix-length lemma (only the contained side may be
@@ -710,8 +708,7 @@ def test_containment_join_matches_bruteforce(spark, docs, threshold, order, posi
     got = {
         (r["doc_a"], r["doc_b"]): r["containment"]
         for r in containment_join(
-            df, threshold=threshold, shingle_n=n, order=order,
-            positional=positional,
+            df, threshold=threshold, shingle_n=n, order=order
         ).collect()
     }
     assert got == want

@@ -15,7 +15,6 @@ def main() -> None:
     args = sys.argv[1:]
     out_dir, tag = "plans/r12", "after"
     names = []
-    it = iter(range(len(args)))
     i = 0
     while i < len(args):
         if args[i] == "--dir":
