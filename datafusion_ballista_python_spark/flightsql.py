@@ -59,12 +59,7 @@ from collections import OrderedDict
 from typing import Iterator, Optional
 
 import pyarrow as pa
-
-try:  # pyarrow built without flight is possible; gate imports
-    import pyarrow.flight as flight
-except ImportError:  # pragma: no cover
-    flight = None
-
+import pyarrow.flight as flight
 from pyspark.sql import SparkSession
 
 from .datatypes import result_arrow_schema
@@ -442,7 +437,7 @@ def _is_command(df) -> bool:
 _CMD_PREFIX = b"cmd:"
 
 
-class FlightSqlServer(flight.FlightServerBase if flight else object):
+class FlightSqlServer(flight.FlightServerBase):
     """Arrow Flight SQL front-end for a SparkSession's catalog."""
 
     def __init__(
@@ -460,8 +455,6 @@ class FlightSqlServer(flight.FlightServerBase if flight else object):
         execute a side-effecting statement twice.  Raise it for clients
         with long think-time between metadata and execution RPCs; the
         default matches typical driver pipelining (back-to-back RPCs)."""
-        if flight is None:  # pragma: no cover
-            raise BallistaError("pyarrow was built without flight support")
         super().__init__(location)
         self.spark = spark
         # eagerly-executed statements (DDL/DML): spark.sql() runs them at

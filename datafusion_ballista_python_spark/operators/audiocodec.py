@@ -1,31 +1,21 @@
 """Pure-stdlib WAV (RIFF PCM) codec: 8/16/32-bit integer PCM, mono or
 multi-channel, encode + decode — the audio sibling of
 operators/imagecodec.py, so the multimodal audio path runs a REAL codec
-for real WAV payloads (librosa/soundfile aren't in this container, but
-RIFF PCM is just struct unpacking).
+for real WAV payloads (RIFF PCM is just struct unpacking, so no
+librosa/soundfile dependency is needed).  It is the only decoder: no
+installed package changes which code decodes a payload, so the samples
+are the same on every host.
 
 Decoded audio is an ``Audio`` tuple (sample_rate, channels, samples) with
 ``samples`` a flat list of ints, frame-major (interleaved channels, as
 stored) — no numpy required.  Runs inside mapInPandas workers per Arrow
-batch; swap for soundfile in production with the same two entry points.
+batch.
 """
 
 from __future__ import annotations
 
-import io
 import struct
 from typing import NamedTuple, Optional
-
-# Optional fast path: when soundfile (libsndfile) is installed, 16/32-bit
-# PCM payloads decode natively.  Gated to the subset the stdlib codec
-# accepts (fmt chunk validated first) and requested at the container's
-# exact integer dtype, so sample values are bit-identical either way;
-# 8-bit WAV (unsigned, normalized to signed here) stays on the stdlib
-# path to keep that normalization in one place.
-try:  # pragma: no cover - exercised only where soundfile is installed
-    import soundfile as _soundfile
-except ImportError:
-    _soundfile = None
 
 
 class Audio(NamedTuple):
@@ -49,7 +39,6 @@ def decode_wav(data: bytes) -> Audio:
     pos = 12
     fmt = None
     pcm = None
-    n_data_chunks = 0
     while pos + 8 <= len(data):
         cid = data[pos : pos + 4]
         (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
@@ -68,40 +57,11 @@ def decode_wav(data: bytes) -> Audio:
                 raise AudioCodecError(f"unsupported bit depth {bits}")
             fmt = (channels, rate, bits // 8)
         elif cid == b"data":
-            pcm = body
-            n_data_chunks += 1
+            pcm = body  # several data chunks: the last one wins
         pos += 8 + size + (size & 1)  # chunks are word-aligned
     if fmt is None or pcm is None:
         raise AudioCodecError("missing fmt/data chunk")
     channels, rate, width = fmt
-    # Fast path only where it is provably bit-identical to the stdlib
-    # parse below: exactly ONE data chunk (libsndfile decodes the FIRST,
-    # we keep the LAST) and a whole number of frames (we keep a dangling
-    # partial-frame sample, libsndfile drops it) — otherwise fall through.
-    if (
-        _soundfile is not None
-        and width in (2, 4)
-        and n_data_chunks == 1
-        and channels > 0
-        and len(pcm) % (channels * width) == 0
-    ):
-        try:
-            arr, sf_rate = _soundfile.read(
-                io.BytesIO(data),
-                dtype="int16" if width == 2 else "int32",
-                always_2d=True,
-            )
-            if (
-                sf_rate == rate
-                and arr.shape[1] == channels
-                and arr.size == len(pcm) // width
-            ):
-                # row-major (frames x channels) flatten == interleaved
-                # order; tolist() is one C-level pass (a per-sample
-                # Python int() loop would eat the native-decode win)
-                return Audio(rate, channels, width, arr.reshape(-1).tolist())
-        except Exception:
-            pass  # fall through to the stdlib path (it raises precisely)
     n = len(pcm) // width
     if width == 1:
         # WAV 8-bit is UNSIGNED; normalize to signed like wider widths

@@ -3,18 +3,17 @@ scanline filters) and 24-bit uncompressed BMP, encode + decode, plus a
 nearest-neighbor resampler.
 
 Exists so the multimodal decode/resize operators (operators/multimodal.py)
-run a REAL codec for real image payloads instead of a stub — the container
-ships no Pillow, but PNG is just zlib (stdlib) + per-scanline unfiltering
-and BMP is raw BGR rows, so a dependency-free implementation is small and
+run a REAL codec for real image payloads instead of a stub — PNG is just
+zlib (stdlib) + per-scanline unfiltering and BMP is raw BGR rows, so a dependency-free implementation is small and
 exact.  The reference engine has no media surface (SURVEY §2.10); this is
 the training-pipeline extension's codec.
 
 Scale note: this runs INSIDE mapInPandas workers, per Arrow batch, where
 the bytes already live — the operator layer's partitioning/shuffle shape is
 unchanged by what codec runs here.  Per-pixel Python is ~100x slower than a
-native codec; a production build swaps `decode_image`/`encode_png` for
-Pillow with the same signatures (the operator layer only calls these two
-entry points and `resize_nearest`).
+native codec.  It is the only decoder: no installed package (Pillow
+included) changes which code decodes a payload, so the accepted subset and
+the decoded pixels are the same on every host.
 
 Decoded images are plain ``Image`` tuples of (width, height, channels,
 pixels) with ``pixels`` a flat ``bytearray`` of length w*h*c, row-major,
@@ -23,23 +22,9 @@ RGB(A)/gray order — no numpy required.
 
 from __future__ import annotations
 
-import io
 import struct
 import zlib
 from typing import NamedTuple, Optional
-
-# Optional fast path: when Pillow is installed, PNG inflate+unfilter runs
-# in its native codec instead of the per-pixel Python loops below.  The
-# path is GATED to exactly the subset the stdlib codec accepts (8-bit,
-# non-interlaced, gray/LA/RGB/RGBA — validated from IHDR first), and
-# PNG decoding is lossless, so both paths return bit-identical pixels:
-# every oracle and pixel-exact test passes either way.
-try:  # pragma: no cover - exercised only where Pillow is installed
-    from PIL import Image as _PILImage
-except ImportError:
-    _PILImage = None
-
-_PIL_MODES = {"L": 1, "LA": 2, "RGB": 3, "RGBA": 4}
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
@@ -128,9 +113,7 @@ def decode_png(data: bytes) -> Image:
     # an unbounded zlib.decompress on a crafted payload could demand GBs
     # (decompression bomb) and OOM the executor task instead of raising.
     # Cap output at expected + 1: one extra byte distinguishes "too much
-    # data" from an exact match.  This strict inflate runs on BOTH paths
-    # so the accepted subset is identical with and without Pillow
-    # (Pillow tolerates surplus IDAT data; the stdlib path rejects it).
+    # data" from an exact match, so surplus IDAT data is rejected too.
     d = zlib.decompressobj()
     raw = d.decompress(bytes(idat), expected + 1)
     if len(raw) != expected:
@@ -140,17 +123,6 @@ def decode_png(data: bytes) -> Image:
         # terminated: truncated input (zlib.decompress would have raised;
         # a max_length-bounded decompressobj returns quietly instead)
         raise ImageCodecError("incomplete or truncated IDAT stream")
-    if _PILImage is not None:
-        # payload is now validated to the exact stdlib subset (IHDR +
-        # strict inflate); Pillow's lossless decode returns the same bytes
-        try:
-            pil = _PILImage.open(io.BytesIO(data))
-            pil.load()
-            ch = _PIL_MODES.get(pil.mode)
-            if ch == channels and (pil.width, pil.height) == (width, height):
-                return Image(width, height, channels, bytearray(pil.tobytes()))
-        except Exception:
-            pass  # fall through to the stdlib path (it raises precisely)
     out = bytearray(stride * height)
     prev = bytearray(stride)
     bpp = channels

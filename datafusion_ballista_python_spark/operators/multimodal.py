@@ -5,8 +5,8 @@ Arrow-batched ``mapInPandas`` where a real codec would run.
 The reference engine has no media operators; this is the training-data-
 pipeline extension mandated by the blueprint (SURVEY §7 step 8).  Image
 payloads (PNG/BMP) decode through a REAL pure-stdlib codec
-(operators/imagecodec.py — no Pillow in this container, but PNG is zlib +
-scanline unfiltering); audio/video formats have no stdlib codec, so those
+(operators/imagecodec.py — PNG is zlib + scanline unfiltering, so no
+Pillow dependency); audio/video formats have no stdlib codec, so those
 payloads take a deterministic byte-bucket fallback — the Spark-side
 plumbing (schema, partitioning, Arrow batch shape, UDF signatures) is the
 same either way and fully tested.
@@ -140,12 +140,11 @@ def sample_frames(
 # ---------------------------------------------------------------------------
 # decode kernels — mapInPandas plumbing is real, and so is the image path:
 # real PNG/BMP payloads decode through the pure-stdlib codec in
-# operators/imagecodec.py (zlib + scanline unfiltering; no Pillow in this
-# container).  Non-image payloads (audio/video formats with no stdlib
+# operators/imagecodec.py (zlib + scanline unfiltering), the only image
+# decoder.  Non-image payloads (audio/video formats with no stdlib
 # codec, or the corpus's synthetic text-byte payloads) fall back to the
 # deterministic byte-bucket kernel so the whole operator stays
-# oracle-checkable.  A production build swaps imagecodec for Pillow/librosa
-# /av inside the same iterator — the operator layer only calls
+# oracle-checkable.  The operator layer only calls
 # decode_image/encode_png/resize_nearest.
 # ---------------------------------------------------------------------------
 

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..datatypes import arrow_schema_to_spark
 from ..errors import BallistaError
+from .avro import read_avro  # noqa: F401  (src/context.rs:89-98)
 
 # columns read as raw ns-since-epoch longs (nanosAsLong) that should be
 # surfaced as microsecond timestamps; keyed by (table-ish) column name
@@ -74,35 +75,6 @@ def read_csv(
     else:
         reader = reader.option("inferSchema", "true")
     return reader.csv(path)
-
-
-def read_avro(spark: SparkSession, path: str) -> SparkDataFrame:
-    """Avro scan (src/context.rs:89-98).  Uses the spark-avro datasource
-    when the package is on the classpath; otherwise falls back to the
-    built-in pure-Python container reader (sources/avro.py) — distributed
-    one-task-per-file, null/deflate codecs."""
-    try:
-        return spark.read.format("avro").load(path)
-    except Exception as e:
-        if not _avro_datasource_missing(str(e)):
-            raise
-        from .avro import read_avro_fallback
-
-        return read_avro_fallback(spark, path)
-
-
-def _avro_datasource_missing(msg: str) -> bool:
-    """Fallback trigger for :func:`read_avro`: ONLY the spark-avro
-    datasource-missing signature routes to the pure-Python reader.  The
-    old trigger matched the substring 'avro' anywhere in the message —
-    including in the PATH of an ordinary file-not-found — so real errors
-    (missing paths, corrupt files under spark-avro) were swallowed and
-    re-surfaced as confusing fallback failures."""
-    return (
-        "DATA_SOURCE_NOT_FOUND" in msg
-        or "Failed to find data source" in msg
-        or "Failed to find the data source" in msg
-    )
 
 
 def read_json(spark: SparkSession, path: str) -> SparkDataFrame:

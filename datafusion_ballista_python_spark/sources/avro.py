@@ -2,9 +2,9 @@
 
 The reference binds ``read_avro`` / ``register_avro`` as first-class APIs
 (reference ``src/context.rs:89-98, 147-154``).  Spark's own avro datasource
-lives in the external ``spark-avro`` package, which is not present in this
-deployment and cannot be fetched offline — so this module implements the
-(public, versioned) Avro 1.x container format directly:
+lives in the external ``spark-avro`` package, which the engine does not
+depend on — so this module implements the (public, versioned) Avro 1.x
+container format directly and is the only avro reader and writer:
 
 - **Reader**: distributed, one task per file via ``mapInPandas`` — exactly
   the reference's scan parallelism (1 file = 1 partition,
@@ -513,15 +513,17 @@ def _list_avro_files(path: str) -> list[str]:
             for f in os.listdir(path)
             if f.endswith(".avro") and not f.startswith((".", "_"))
         )
-    else:
+    elif os.path.isfile(path):
         files = [path]
+    else:
+        raise BallistaError(f"avro: no such file or directory: {path!r}")
     if not files:
         raise BallistaError(f"avro: no .avro files under {path!r}")
     return files
 
 
-def read_avro_fallback(spark: SparkSession, path: str) -> SparkDataFrame:
-    """Distributed avro scan without spark-avro: one task per file.
+def read_avro(spark: SparkSession, path: str) -> SparkDataFrame:
+    """Distributed avro scan (src/context.rs:89-98): one task per file.
 
     The driver reads only the first file's header for the schema; each
     executor task decodes its own file and emits Arrow batches

@@ -13,7 +13,10 @@ Scale: windowed/session aggregation state is partitioned by group key across
 executors (RocksDB/HDFS state store on a real cluster); watermarks bound
 state size — without one, 100 TB of late-arriving keys would pin state
 forever.  ``stateful_user_stats`` keeps per-key state deliberately tiny
-(four numbers) so state size is O(distinct keys), not O(events).
+(four numbers) so state size is O(distinct keys), not O(events).  It is
+the one custom-state path, on ``applyInPandasWithState``;
+``transformWithStateInPandas`` is not used, since its Python worker needs
+the protobuf package.
 """
 
 from __future__ import annotations
@@ -197,95 +200,6 @@ def stateful_user_stats(events: DataFrame) -> DataFrame:
         stateStructType=_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stateful_user_stats_tws(events: DataFrame) -> DataFrame:
-    """The same per-user running stats as :func:`stateful_user_stats`, on
-    Spark 4's ``transformWithStateInPandas`` (StatefulProcessor) API — the
-    successor to ``applyInPandasWithState`` with typed state handles
-    (value/list/map), timers, and state-schema evolution.  Both paths are
-    kept: applyInPandasWithState for 3.x-compatible deployments, this for
-    4.x (and for operators that need timers or multiple state variables).
-
-    Scale: identical to the applyInPandasWithState path — one shuffle on
-    the group key, state is four scalars per key in the RocksDB state
-    store (``require_rocksdb_state`` sets the provider; transformWithState
-    only runs on RocksDB), so memory is O(distinct keys) with spill to
-    disk handled by the store itself.
-
-    Runtime dependency note: Spark's transform_with_state_driver_worker
-    speaks its state-server protocol via google.protobuf
-    (StateMessage_pb2), so starting this operator requires the protobuf
-    package on driver and executors; environments without it should use
-    :func:`stateful_user_stats` (applyInPandasWithState), which carries
-    no such dependency.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _UserStatsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("stats", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            import numpy as np
-            import pandas as pd
-
-            prior = self._state.get()
-            n, total_us6, mx, last_us = (
-                prior if prior is not None else (0, 0, float("-inf"), 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                # NULL handling + half-away-from-zero rounding, matching
-                # the batch oracle's SUM/MAX over CAST(value AS
-                # DECIMAL(25,6)) — see _update_user_stats
-                vals = pdf["value"].values[pd.notna(pdf["value"].values)]
-                if len(vals):
-                    scaled = vals * 1e6
-                    total_us6 += int(
-                        np.trunc(scaled + np.copysign(0.5, scaled))
-                        .astype("int64")
-                        .sum()
-                    )
-                    mx = max(mx, float(vals.max()))
-                ts_vals = pdf["ts"].values[pd.notna(pdf["ts"].values)]
-                if len(ts_vals):
-                    batch_us = ts_vals.astype("datetime64[us]").astype("int64")
-                    last_us = max(last_us, int(batch_us.max()))
-            self._state.update((n, total_us6, mx, last_us))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total_us6 / 1e6],
-                    "max_value": [mx],
-                    "last_ts": [pd.Timestamp(last_us, unit="us")],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        _UserStatsProcessor(),
-        outputStructType=STATEFUL_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def require_rocksdb_state(spark: SparkSession) -> None:
-    """Point the streaming state store at RocksDB — required by
-    transformWithState, and the provider you want for ANY large stateful
-    stream: state lives off-heap/on-disk with changelog checkpointing
-    instead of in executor-heap HDFSBackedStateStore maps."""
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
 
 

@@ -4,10 +4,12 @@ Reference (``src/udf.rs:33-95``, ``ballista/__init__.py:81-95``): the user
 function receives **pyarrow Arrays** (vectorized) and returns a pyarrow
 Array; signature ``udf(func, input_types, return_type, volatility, name)``.
 
-Implementation: an Arrow-batched pandas UDF — data crosses the JVM/Python
-boundary as Arrow batches (~10-100x faster than row-at-a-time python UDFs),
-then converts Series<->Array at zero-ish cost.  ``volatility='volatile'``
-maps to ``asNondeterministic()`` so Catalyst won't collapse duplicate calls.
+Implementation: a PySpark ``arrow_udf`` (pyspark >= 4.1) — data crosses the
+JVM/Python boundary as Arrow batches (~10-100x faster than row-at-a-time
+python UDFs) and reaches the function as pyarrow Arrays with no pandas
+step, so float NaN and NULL stay distinct as in the reference.
+``volatility='volatile'`` maps to ``asNondeterministic()`` so Catalyst
+won't collapse duplicate calls.
 
 Note the reference binds these but Ballista could not execute them
 distributed (``docs/source/user-guide/python.md:137-138``); ours execute on
@@ -63,33 +65,17 @@ class ScalarUDF:
             return out
 
         def _arrow_vectorized(*arrays):
-            # native Arrow batches (pyspark >= 4.1 arrow_udf): the
-            # reference's exact pyarrow-Array contract — float NaN and
-            # NULL stay DISTINCT (the pandas path folds NaN into null at
-            # the series boundary, so a NaN-vs-null-sensitive udf saw
-            # different inputs than the reference engine)
             cast = [
                 a.cast(t) if a.type != t else a
                 for a, t in zip(arrays, in_types)
             ]
             return _coerce_out(func(*cast))
 
-        def _vectorized(*series):
-            arrays = [
-                pa.Array.from_pandas(s, type=t) for s, t in zip(series, in_types)
-            ]
-            return _coerce_out(func(*arrays)).to_pandas()
-
         with warnings.catch_warnings():
             warnings.simplefilter("ignore")
-            if hasattr(F, "arrow_udf"):
-                pudf = F.arrow_udf(
-                    _arrow_vectorized, returnType=arrow_to_spark(return_type)
-                )
-            else:  # pyspark < 4.1: pandas boundary (NaN folds to null)
-                pudf = F.pandas_udf(
-                    _vectorized, returnType=arrow_to_spark(return_type)
-                )
+            pudf = F.arrow_udf(
+                _arrow_vectorized, returnType=arrow_to_spark(return_type)
+            )
         if volatility == "volatile":
             pudf = pudf.asNondeterministic()
         self._pudf = pudf

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from typing import Optional
 
+from pyspark.sql.functions import udtf as spark_udtf
+
 from .errors import BallistaError
 
 
@@ -32,11 +34,6 @@ def udtf(cls=None, *, returnType: Optional[str] = None, name: Optional[str] = No
         ctx.register_udtf(SplitWords)          # SQL: SELECT * FROM SplitWords('a b')
         SplitWords(lit("a b")).show()          # DataFrame API
     """
-    try:
-        from pyspark.sql.functions import udtf as spark_udtf
-    except ImportError as e:  # pragma: no cover - pyspark < 3.5
-        raise BallistaError("UDTFs require pyspark >= 3.5") from e
-
     if returnType is None:
         raise BallistaError("udtf requires returnType (e.g. \"word string, n int\")")
 

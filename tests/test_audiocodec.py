@@ -99,31 +99,9 @@ def test_audio_features_real_wav_via_spark(spark):
     assert fb["rms"] == round(math.sqrt(sum(s * s for s in fs) / len(fs)), 4)
 
 
-import pytest as _pytest
-
-from datafusion_ballista_python_spark.operators import audiocodec as _ac
-
-
-@_pytest.mark.skipif(_ac._soundfile is None, reason="soundfile not installed")
-def test_soundfile_fast_path_bit_identical():
-    """With soundfile present, 16/32-bit PCM decodes must match the
-    stdlib path sample-for-sample (dtype pinned to the container width)."""
-    saved = _ac._soundfile
-    for width in (2, 4):
-        audio = _ac.Audio(8000, 2, width, [i * 3 - 40 for i in range(64)])
-        data = _ac.encode_wav(audio)
-        fast = _ac.decode_wav(data)
-        try:
-            _ac._soundfile = None
-            slow = _ac.decode_wav(data)
-        finally:
-            _ac._soundfile = saved
-        assert fast == slow
-
-
-def test_soundfile_gate_falls_back_cleanly_when_absent():
-    audio = _ac.Audio(16000, 1, 2, [100, -100, 32000, -32000])
-    assert _ac.decode_wav(_ac.encode_wav(audio)) == audio
+def test_wav_near_full_scale_16bit_roundtrip():
+    audio = ac.Audio(16000, 1, 2, [100, -100, 32000, -32000])
+    assert ac.decode_wav(ac.encode_wav(audio)) == audio
 
 
 def _riff(chunks: bytes) -> bytes:
@@ -142,9 +120,8 @@ def _fmt_chunk(channels=2, rate=8000, width=2) -> bytes:
 
 def test_partial_frame_keeps_dangling_sample_stdlib():
     """A data chunk whose byte length is NOT a multiple of channels*width:
-    the stdlib contract keeps the dangling partial-frame sample (libsndfile
-    drops it — which is exactly why the fast-path gate requires whole
-    frames; review finding r6)."""
+    the decoder keeps the dangling partial-frame sample rather than
+    dropping it."""
     import struct
 
     pcm = struct.pack("<5h", 10, -10, 20, -20, 30)  # 2ch x 16-bit, 2.5 frames
@@ -156,9 +133,7 @@ def test_partial_frame_keeps_dangling_sample_stdlib():
 
 
 def test_multiple_data_chunks_keep_last_stdlib():
-    """Two data chunks: the stdlib parser keeps the LAST (libsndfile decodes
-    the FIRST — the fast-path gate rejects multi-data containers so the two
-    parses can never silently disagree)."""
+    """Two data chunks: the decoder keeps the LAST one."""
     import struct
 
     first = struct.pack("<2h", 1, 2)

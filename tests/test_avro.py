@@ -1,7 +1,7 @@
 """Avro end-to-end: the reference binds read_avro/register_avro as
-first-class (src/context.rs:89-98,147-154).  spark-avro isn't installable
-offline, so these exercise the pure-Python container codec + the
-distributed one-task-per-file read path."""
+first-class (src/context.rs:89-98,147-154).  ``read_avro`` is the
+pure-Python container codec + the distributed one-task-per-file read path
+(the spark-avro package is not used), and these tests exercise both."""
 
 import datetime
 
@@ -14,7 +14,7 @@ from datafusion_ballista_python_spark.errors import BallistaError
 from datafusion_ballista_python_spark.sources.avro import (
     decode_file,
     encode_file,
-    read_avro_fallback,
+    read_avro,
     write_avro,
 )
 
@@ -62,7 +62,7 @@ def test_spark_roundtrip_and_register(spark, sf_dir, tmp_path):
     n_files = write_avro(orders, path)
     assert n_files >= 1
 
-    back = read_avro_fallback(spark, path)
+    back = read_avro(spark, path)
     assert back.count() == orders.count()
     a = sorted(map(tuple, orders.collect()))
     b = sorted(map(tuple, back.collect()))
@@ -89,6 +89,19 @@ def test_read_avro_context_fallback(spark, tmp_path):
     write_avro(df, path, codec="null")
     got = ctx.read_avro(path)
     assert sorted(map(tuple, got.df.collect())) == [(1, "x"), (2, None), (3, "z")]
+
+
+def test_read_avro_missing_path_raises_at_call_site(spark, tmp_path):
+    """A path that does not exist fails in ``read_avro`` itself with a
+    ``BallistaError`` naming the path, not as a raw ``FileNotFoundError``
+    from deep inside the header read."""
+    ctx = BallistaContext(spark=spark)
+    missing = str(tmp_path / "no_such_dir" / "part-0.avro")
+    with pytest.raises(BallistaError, match="no such file or directory") as ei:
+        ctx.read_avro(missing)
+    assert missing in str(ei.value)
+    with pytest.raises(BallistaError, match="no such file or directory"):
+        ctx.register_avro("t_missing_avro", "file://" + missing)
 
 
 def test_avro_errors(tmp_path):
@@ -127,7 +140,7 @@ def test_decimal_timestamp_logical_roundtrip(spark, tmp_path):
     path = str(tmp_path / "typed_avro")
     write_avro(df, path)
 
-    back = read_avro_fallback(spark, path)
+    back = read_avro(spark, path)
     got_types = {f.name: f.dataType for f in back.schema.fields}
     assert got_types["price"] == T.DecimalType(12, 4)
     assert got_types["big"] == T.DecimalType(38, 10)
@@ -166,22 +179,3 @@ def test_decimal_fixed_decode():
     raw = encode_file(schema, rows, codec="null")
     _, got = decode_file(raw)
     assert got == rows
-
-
-def test_read_avro_fallback_trigger_is_specific():
-    """Only the datasource-missing signature may route to the pure-Python
-    reader — the old trigger matched the substring 'avro' anywhere in the
-    message (e.g. in the PATH of an ordinary file-not-found), swallowing
-    real errors.  This env has no spark-avro, so the classifier is tested
-    directly."""
-    from datafusion_ballista_python_spark.sources import _avro_datasource_missing
-
-    assert _avro_datasource_missing(
-        "[DATA_SOURCE_NOT_FOUND] Failed to find the data source: avro."
-    )
-    assert not _avro_datasource_missing(
-        "[PATH_NOT_FOUND] Path does not exist: file:/data/events.avro"
-    )
-    assert not _avro_datasource_missing(
-        "Malformed records in file /x/corrupt.avro"
-    )

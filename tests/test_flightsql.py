@@ -9,11 +9,10 @@ wheel in the test environment.
 """
 
 import pyarrow as pa
+import pyarrow.flight as flight
 import pytest
 
-flight = pytest.importorskip("pyarrow.flight")
-
-from datafusion_ballista_python_spark import flightsql  # noqa: E402
+from datafusion_ballista_python_spark import flightsql
 
 
 @pytest.fixture(scope="module")

@@ -212,31 +212,6 @@ def test_png_decompression_bomb_rejected_bounded():
         ic.decode_png(data2)
 
 
-@pytest.mark.skipif(ic._PILImage is None, reason="Pillow not installed")
-def test_pil_fast_path_bit_identical():
-    """With Pillow present, decode_png must return the SAME pixels as the
-    stdlib path (PNG is lossless; the fast path is gated to the stdlib
-    subset) — the oracles must not notice which path ran."""
-    saved = ic._PILImage
-    for c in (1, 2, 3, 4):
-        img = gradient_image(11, 5, c)
-        data = ic.encode_png(img)
-        fast = ic.decode_png(data)
-        try:
-            ic._PILImage = None
-            slow = ic.decode_png(data)
-        finally:
-            ic._PILImage = saved
-        assert fast == slow
-
-
-def test_pil_gate_falls_back_cleanly_when_absent():
-    """With Pillow absent (this container), the stdlib path must be taken
-    transparently — same results, no errors."""
-    img = gradient_image(6, 4, 3)
-    assert ic.decode_png(ic.encode_png(img)) == img
-
-
 def _chunk(ctype: bytes, body: bytes) -> bytes:
     return (
         struct.pack(">I", len(body))

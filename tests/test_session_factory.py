@@ -74,6 +74,28 @@ def test_no_env_modes_outside_session_module():
     assert readers == [session]
 
 
+def test_no_optional_package_or_version_forks_in_package():
+    # one code path per environment: a module that picks its implementation
+    # by probing an optional package or the PySpark version runs a second
+    # arm the moment a host differs, and no oracle certifies that arm
+    probe = re.compile(
+        r"except\s*\(?[^:\n]*\b(?:ImportError|ModuleNotFoundError)\b"
+        r"|hasattr\(\s*F\s*,"
+    )
+    tracked = subprocess.run(
+        ["git", "ls-files", "datafusion_ballista_python_spark/*.py"],
+        cwd=_REPO, capture_output=True, text=True, check=True,
+    ).stdout.split()
+    assert tracked
+    forks = []
+    for rel in tracked:
+        with open(os.path.join(_REPO, rel), errors="replace") as fh:
+            for lineno, line in enumerate(fh, 1):
+                if probe.search(line):
+                    forks.append(f"{rel}:{lineno}: {line.strip()}")
+    assert forks == []
+
+
 def test_suite_session_carries_local_driver_confs(spark):
     conf = spark.sparkContext.getConf()
     # Spark prepends its own module flags to extraJavaOptions: check the

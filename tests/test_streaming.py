@@ -174,49 +174,6 @@ def test_incremental_dedup_sink_is_idempotent(spark, sf_dir, tmp_path):
     assert stored.where(F.col("doc_id") == 999_999).count() == 0
 
 
-def test_stateful_user_stats_tws_match_batch(spark, sf_dir, events):
-    """transformWithStateInPandas path produces the same final per-user
-    stats as the applyInPandasWithState path and the batch ground truth.
-
-    Skipped where the protobuf package is absent: Spark's
-    transform_with_state_driver_worker imports
-    google.protobuf (StateMessage_pb2) for its state-server protocol, so
-    the operator cannot start without it — an environment gate, not a
-    code path we control."""
-    pytest.importorskip("google.protobuf")
-    prior = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    streaming.require_rocksdb_state(spark)
-    try:
-        stream = streaming.events_stream(spark, sf_dir)
-        out = streaming.run_available_now(
-            streaming.stateful_user_stats_tws(stream), "t_sus_tws", "update"
-        )
-        final = {r["user_id"]: r for r in out.orderBy("user_id").collect()}
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior)
-    want = {
-        r["user_id"]: r
-        for r in events.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("value").alias("tot"),
-            F.max("value").alias("mx"),
-            F.max("ts").alias("last"),
-        )
-        .collect()
-    }
-    assert set(final) == set(want) and len(final) > 0
-    for uid, r in final.items():
-        w = want[uid]
-        assert r["n_events"] == w["n"]
-        assert abs(r["total_value"] - w["tot"]) < 1e-4
-        assert r["max_value"] == w["mx"]
-        assert r["last_ts"] == w["last"]
-
-
 class TestIncrementalRollup:
     @pytest.fixture(scope="class")
     def two_file_events(self, spark, sf_dir, tmp_path_factory):

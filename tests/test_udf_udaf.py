@@ -314,8 +314,7 @@ def test_udaf_nan_float_state_distinct_from_null(ctx):
 
 def test_scalar_udf_nan_vs_null_inputs_distinct(ctx):
     """The reference's pyarrow contract: float NaN and NULL are DISTINCT
-    inputs.  The pandas_udf boundary folded NaN into null; the arrow_udf
-    path (pyspark >= 4.1) preserves both."""
+    inputs (a pandas boundary would fold NaN into null)."""
     import math
 
     def classify(arr):
@@ -338,6 +337,22 @@ def test_scalar_udf_nan_vs_null_inputs_distinct(ctx):
         BDF(df).select(col("i"), u(col("x")).alias("c")).sort(col("i").sort()).collect()
     )
     assert out.column("c").to_pylist() == ["num", "nan", "null"]
+
+
+def test_scalar_udf_is_nan_keeps_null_distinct(ctx):
+    """An Arrow compute kernel on the udf's input sees NaN as a value and
+    NULL as missing: ``pc.is_nan`` gives True for NaN and propagates NULL,
+    so a null input that arrived as NaN would read True here."""
+    u = udf(lambda a: pc.is_nan(a), [pa.float64()], pa.bool_(), name="is_nan")
+    df = ctx.spark.createDataFrame(
+        [(1, 1.0), (2, float("nan")), (3, None)], "i long, x double"
+    )
+    from datafusion_ballista_python_spark.dataframe import DataFrame as BDF
+
+    out = pa.Table.from_batches(
+        BDF(df).select(col("i"), u(col("x")).alias("n")).sort(col("i").sort()).collect()
+    )
+    assert out.column("n").to_pylist() == [False, True, None]
 
 
 def test_udaf_null_key_group_survives_mixed_plain_aggs(ctx):
