@@ -4,8 +4,8 @@ nearest-neighbor resampler.
 
 Exists so the multimodal decode/resize operators (operators/multimodal.py)
 run a REAL codec for real image payloads instead of a stub — PNG is just
-zlib (stdlib) + per-scanline unfiltering and BMP is raw BGR rows, so a dependency-free implementation is small and
-exact.  The reference engine has no media surface (SURVEY §2.10); this is
+zlib (stdlib) + per-scanline unfiltering and BMP is raw BGR rows, so a
+dependency-free implementation is small and exact.  The reference engine has no media surface (SURVEY §2.10); this is
 the training-pipeline extension's codec.
 
 Scale note: this runs INSIDE mapInPandas workers, per Arrow batch, where

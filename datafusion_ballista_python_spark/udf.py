@@ -55,7 +55,12 @@ class ScalarUDF:
 
         in_types = self.input_types
 
-        def _coerce_out(out):
+        def _arrow_vectorized(*arrays):
+            cast = [
+                a.cast(t) if a.type != t else a
+                for a, t in zip(arrays, in_types)
+            ]
+            out = func(*cast)
             if isinstance(out, pa.ChunkedArray):
                 out = out.combine_chunks()
             if not isinstance(out, pa.Array):
@@ -63,13 +68,6 @@ class ScalarUDF:
             elif out.type != return_type:
                 out = out.cast(return_type)
             return out
-
-        def _arrow_vectorized(*arrays):
-            cast = [
-                a.cast(t) if a.type != t else a
-                for a, t in zip(arrays, in_types)
-            ]
-            return _coerce_out(func(*cast))
 
         with warnings.catch_warnings():
             warnings.simplefilter("ignore")
